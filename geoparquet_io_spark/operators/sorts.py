@@ -13,12 +13,49 @@ key with file boundaries at range splits.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geoparquet_io_spark.functions import geom as G
 from geoparquet_io_spark.operators.add_columns import _centroid_lonlat
 from geoparquet_io_spark.operators.stats import bounds as _bounds
+
+# physical nodes that run Python: (Arrow|Batch)EvalPython[UDTF],
+# MapInPandas/MapInArrow, FlatMap*In(Pandas|Arrow), AggregateInPandas ...
+_PYTHON_NODE = re.compile(r"EvalPython|InPandas|InArrow")
+
+
+def _runs_python(df: DataFrame) -> bool:
+    """Does ``df``'s physical plan (after column pruning) run Python?
+    Walks children only, so a cached relation's inner plan, which is
+    not re-run, does not count."""
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if _PYTHON_NODE.search(node.nodeName()):
+            return True
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return False
+
+
+def _pin_before_stats(df: DataFrame, columns: list) -> DataFrame:
+    """Pin ``df`` lazily (``localCheckpoint(eager=False)``, no extra
+    job) when the rows a statistics pass reads from ``columns`` come out
+    of Python.  The stats job then computes the rows once and stores
+    them, and the range sort's sample and shuffle-map read the blocks
+    instead of re-running the UDF chain (the ``_checked_write`` idiom,
+    operators/partition.py).  When the stats read only native columns
+    the frame is returned as-is: a pin would block column pruning and
+    store every column, including UDF columns the caller later drops.
+    A pinned frame has no lineage past the pin, like every
+    localCheckpoint."""
+    cols = [c for c in columns if c in df.columns]
+    if cols and _runs_python(df.select(*cols)):
+        return df.localCheckpoint(eager=False)
+    return df
 
 
 def sort_hilbert(
@@ -31,19 +68,27 @@ def sort_hilbert(
 ) -> DataFrame:
     """Order rows along a Hilbert curve over the dataset envelope.
 
-    Two passes like the reference (bounds agg, then keyed sort,
-    core/hilbert_order.py:80-113); the bounds pass is a 4-value agg that
-    reads only the bbox/geometry column.  Pass ``env`` to skip it — at
-    100 TB, get the envelope in O(footers) from
+    Without ``env`` the reference's envelope pass runs first (bounds
+    agg, then keyed sort, core/hilbert_order.py:80-113).  When the
+    column the envelope reads (bbox covering, else geometry) comes out
+    of a Python UDF chain, the input is pinned lazily before the pass
+    (``_pin_before_stats``): the envelope job runs the chain once and
+    stores the rows, and the range sort's sample and shuffle-map read
+    them.  Pass ``env`` to skip the pass and the pin — at 100 TB, get
+    the envelope in O(footers) from
     ``inspect_check.bounds_from_metadata`` instead of scanning every
-    row.  The key itself is NATIVE (functions/geom.py:with_hilbert_key —
-    bit-parallel JVM expressions, no Python), so the range sort's two
-    key evaluations (sampling + shuffle write) never leave codegen.
+    row.  With a bbox covering the key is NATIVE
+    (functions/geom.py:with_hilbert_key — bit-parallel JVM expressions,
+    no Python), so the range sort's two key evaluations (sampling +
+    shuffle write) never leave codegen; without one, the centroid UDF
+    feeding the key runs in both.
     """
-    x, y = _centroid_lonlat(df, geometry_column, bbox_column)
     if env is None:
+        df = _pin_before_stats(df, [bbox_column if bbox_column in df.columns
+                                    else geometry_column])
         env = _bounds(df, geometry_column=geometry_column,
                       bbox_column=bbox_column)
+    x, y = _centroid_lonlat(df, geometry_column, bbox_column)
     if env is None or any(v is None or v != v for v in env):
         # empty / all-null-geometry input: no envelope exists, and any
         # ordering of zero meaningful keys is correct — return as-is
@@ -111,13 +156,16 @@ def sort_zorder(
 ) -> DataFrame:
     """Order rows along a Morton (Z-order) curve over the dataset
     envelope — the layout key Delta/Iceberg-style Z-ORDER compaction
-    uses.  Same two-pass shape as sort_hilbert (bounds agg, then
-    range-partitioned global sort); the key itself is ~10 integer ops
+    uses.  Same shape as sort_hilbert without ``env``: envelope pass
+    (pinned the same way when its input comes out of Python), then a
+    range-partitioned global sort.  The key itself is ~10 integer ops
     via magic-mask bit spreading (functions/geokeys.py), all codegen."""
     from geoparquet_io_spark.functions.geokeys import morton_key
 
-    x, y = _centroid_lonlat(df, geometry_column, bbox_column)
+    df = _pin_before_stats(df, [bbox_column if bbox_column in df.columns
+                                else geometry_column])
     env = _bounds(df, geometry_column=geometry_column, bbox_column=bbox_column)
+    x, y = _centroid_lonlat(df, geometry_column, bbox_column)
     if env is None or any(v is None or v != v for v in env):
         return df              # empty / all-null / NaN-extent input
     key = key_column or "__zorder"
@@ -239,8 +287,8 @@ def zorder_by(
       spread lexically-clustered values, same trade-off Delta makes).
 
     Scale: one bounded stats pass + one range-partitioned sort — the
-    same two-pass shape as sort_hilbert; no windows, no driver loops
-    over rows.
+    same shape as sort_hilbert, including its pin when the numeric
+    columns come out of Python; no windows, no driver loops over rows.
     """
     from pyspark.sql import types as T_
 
@@ -266,6 +314,7 @@ def zorder_by(
     n = (1 << bits) - 1
     ids = []
     num_cols = [c for c in columns if numeric[c]]
+    df = _pin_before_stats(df, num_cols)
     if method == "linear" and num_cols:
         aggs = []
         for c in num_cols:
