@@ -12,15 +12,10 @@ joins; these helpers cover the cases AQE can't re-plan:
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# a shuffle exchange node in a physical-plan string ("Exchange
-# hashpartitioning/rangepartitioning/RoundRobinPartitioning/
-# SinglePartition"); the lookbehind excludes BroadcastExchange
-_SHUFFLE_EXCHANGE = re.compile(r"(?<![A-Za-z])Exchange")
+from geoparquet_io_spark.plans import shuffles
 
 
 def salted_distinct_count(df: DataFrame, key: str, value: str,
@@ -106,29 +101,19 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
     multi-file lake, any 100 TB table), the df passes through untouched —
     this never inserts a shuffle on a big scan.
 
-    Plans that already contain a SHUFFLE exchange pass through without
-    even probing: a post-shuffle stage's parallelism is set by the
-    shuffle (AQE sizes it by the data), never by the file layout, so
-    the repartition would be redundant — and the ``.rdd`` partition
-    probe on such a plan is itself expensive, because under AQE it
-    EXECUTES every upstream query stage as a throwaway job (the
-    materialized stages are not reused by later actions; measured
-    ~0.5 s + 1 Spark job per call in the streaming semantic-dedup sink,
-    whose batch frame arrives behind a dropDuplicates).  A broadcast
-    exchange does NOT count: it never re-spreads the streamed side, so
-    a broadcast-joined single-file scan still needs the probe.
+    Plans that shuffle into more than one partition pass through
+    unprobed (``plans.shuffles``, 0 jobs): the shuffle, not the file
+    layout, sets their parallelism (though AQE may coalesce a byte-small
+    one below the cores), and under AQE the ``.rdd`` probe EXECUTES every
+    upstream stage as a throwaway job (~0.5 s + 1 job per call in the
+    streaming semantic-dedup sink).  A broadcast exchange does not
+    count, nor does a single-partition one (``repartition(1)``, a window
+    without ``partitionBy``), which pins what follows to one task.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * multiplier
-    try:
-        # physical plan WITHOUT execution (toString never runs stages —
-        # strictly cheaper than .rdd, which plans AND executes); matches
-        # Exchange but not BroadcastExchange/ReusedExchange-of-broadcast
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if _SHUFFLE_EXCHANGE.search(plan):
-            return df
-    except Exception:
-        pass    # plan access is best-effort; the probe below still works
+    if shuffles(df):
+        return df
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

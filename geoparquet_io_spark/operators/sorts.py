@@ -13,32 +13,13 @@ key with file boundaries at range splits.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geoparquet_io_spark.functions import geom as G
 from geoparquet_io_spark.operators.add_columns import _centroid_lonlat
 from geoparquet_io_spark.operators.stats import bounds as _bounds
-
-# physical nodes that run Python: (Arrow|Batch)EvalPython[UDTF],
-# MapInPandas/MapInArrow, FlatMap*In(Pandas|Arrow), AggregateInPandas ...
-_PYTHON_NODE = re.compile(r"EvalPython|InPandas|InArrow")
-
-
-def _runs_python(df: DataFrame) -> bool:
-    """Does ``df``'s physical plan (after column pruning) run Python?
-    Walks children only, so a cached relation's inner plan, which is
-    not re-run, does not count."""
-    stack = [df._jdf.queryExecution().sparkPlan()]
-    while stack:
-        node = stack.pop()
-        if _PYTHON_NODE.search(node.nodeName()):
-            return True
-        kids = node.children()
-        stack += [kids.apply(i) for i in range(kids.size())]
-    return False
+from geoparquet_io_spark.plans import runs_python
 
 
 def _pin_before_stats(df: DataFrame, columns: list) -> DataFrame:
@@ -53,7 +34,7 @@ def _pin_before_stats(df: DataFrame, columns: list) -> DataFrame:
     A pinned frame has no lineage past the pin, like every
     localCheckpoint."""
     cols = [c for c in columns if c in df.columns]
-    if cols and _runs_python(df.select(*cols)):
+    if cols and runs_python(df.select(*cols)):
         return df.localCheckpoint(eager=False)
     return df
 

@@ -3,7 +3,8 @@ on (pushdown, broadcast, codegen) actually materialize.
 
 The reference gets row-group pruning from DuckDB implicitly; here the
 same property must hold through Catalyst — these helpers make it
-assertable in tests and visible in benchmarks (SURVEY.md section 4)."""
+assertable in tests and visible in benchmarks (SURVEY.md section 4).
+The engine's own plan gates read node names from one walk, ``plan_nodes``."""
 
 from __future__ import annotations
 
@@ -19,6 +20,37 @@ def formatted_plan(df: DataFrame) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_nodes(df: DataFrame):
+    """The physical plan's nodes, planned but not run (0 jobs):
+    ``executedPlan()`` children only, so a cached relation's inner plan
+    does not count, stepping into an ``AdaptiveSparkPlan``'s
+    ``initialPlan()`` (the AQE node has no children, and a run frame's
+    current plan hides its exchanges behind query-stage leaves)."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.initialPlan())
+            continue
+        yield node
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+
+
+def shuffles(df: DataFrame) -> bool:
+    """A shuffle into >1 partition (not broadcast, not SinglePartition)?"""
+    return any(n.nodeName() == "Exchange"
+               and n.outputPartitioning().numPartitions() > 1
+               for n in plan_nodes(df))
+
+
+def runs_python(df: DataFrame) -> bool:
+    """A Python node: (Arrow|Batch)EvalPython[UDTF], MapIn(Pandas|Arrow),
+    FlatMap*In(Pandas|Arrow), AggregateInPandas ...?"""
+    return any(k in n.nodeName() for n in plan_nodes(df)
+               for k in ("EvalPython", "InPandas", "InArrow"))
 
 
 def _split_top_level(s: str, opens: str = "([<", closes: str = ")]>",

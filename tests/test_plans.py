@@ -383,3 +383,60 @@ def test_ann_recall_plan_no_cartesian(spark):
         .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_plan_gates_decide_on_nodes_without_jobs(spark):
+    """shuffles()/runs_python() answer from node names of the planned
+    (never executed) physical plan, AQE-wrapped or not, before and after
+    the frame has run, and the decision itself launches no Spark job."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from geoparquet_io_spark.plans import runs_python, shuffles
+    from geoparquet_io_spark.testsupport.tables import load_table
+
+    @F.pandas_udf("long")
+    def plus1(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    c = load_table(spark, SF_SMOKE, "customer")
+    agg = c.groupBy("c_nationkey").count()
+    small = spark.range(30).select(
+        F.col("id").cast("int").alias("c_nationkey"))
+    cases = {
+        "scan": (c, False, False),
+        "agg": (agg, True, False),
+        "repartition1": (c.repartition(1), False, False),
+        "global_window": (c.withColumn("rn", F.row_number().over(
+            Window.orderBy("c_custkey"))), False, False),
+        "broadcast_join": (c.join(F.broadcast(small), "c_nationkey"),
+                           False, False),
+        "udf_scan": (c.select(plus1("c_custkey")), False, True),
+        "udf_after_agg": (agg.select(plus1("count")), True, True),
+    }
+    agg.collect()
+    sc = spark.sparkContext
+    group = "plan-gate-decisions"
+    sc.setJobGroup(group, "plan gates")
+    try:
+        got = {k: (shuffles(df), runs_python(df))
+               for k, (df, _, _) in cases.items()}
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == {k: (s, p) for k, (_, s, p) in cases.items()}
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_query_execution_has_one_home():
+    """Plan inspection lives in plans/: no other library module reaches
+    into queryExecution() with a reader of its own."""
+    import pathlib
+
+    import geoparquet_io_spark
+
+    root = pathlib.Path(geoparquet_io_spark.__file__).parent
+    users = sorted(p.relative_to(root).as_posix()
+                   for p in root.rglob("*.py")
+                   if "queryExecution()" in p.read_text(encoding="utf-8"))
+    assert users == ["plans/__init__.py"]

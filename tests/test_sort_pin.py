@@ -146,6 +146,32 @@ def test_sort_write_runs_upstream_udf_once(spark, tmp_path, sort):
     assert acc.value == N
 
 
+@pytest.mark.parametrize("ran_first", [False, True])
+def test_pin_sees_python_behind_adaptive_plan(spark, tmp_path, ran_first):
+    """A geometry UDF applied after a groupBy: the stats read it through
+    an AQE-wrapped plan, and still do once the frame has run.  The sort
+    must pin, and the UDF must run once per row for sort + write."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("binary")
+    def tap(g: pd.Series) -> pd.Series:
+        acc.add(len(g))
+        return g
+
+    base = _polygons(spark)
+    gt = base._wrap(base.df.groupBy("id")
+                    .agg(F.first("geometry").alias("geometry"))
+                    .withColumn("geometry", tap(F.col("geometry"))))
+    if ran_first:
+        assert len(gt.df.collect()) == N
+    before = acc.value
+    out = gt.sort_hilbert()
+    assert _pinned(out.df)
+    files = out.write(str(tmp_path / "out"))
+    assert sum(pq.ParquetFile(f).metadata.num_rows for f in files) == N
+    assert acc.value - before == N
+
+
 def test_native_stats_input_is_not_pinned(spark):
     """The bench.py geo_hilbert_key shape: geometry from a pandas UDF,
     a native bbox covering, and a caller that keeps only the id and the
