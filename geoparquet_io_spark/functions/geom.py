@@ -184,9 +184,10 @@ def st_envelope_struct(g: pd.Series) -> pd.DataFrame:
     NULL/empty geometry -> NULL fields (see _na_masked)."""
     fast = _try_bulk_point_decode(g)
     if fast is not None:
-        xs, ys, nulls = fast
+        xs, ys, _ = fast
         vals = np.column_stack([xs, ys, xs, ys])
-        vals[nulls] = np.nan
+        # wkb.geom_envelope's rule: a NaN vertex adds no bounds at all
+        vals[np.isnan(xs) | np.isnan(ys)] = np.nan
         return _na_masked(vals, ["xmin", "ymin", "xmax", "ymax"])
     vals = np.full((len(g), 4), np.nan)
     for i, b in enumerate(g):

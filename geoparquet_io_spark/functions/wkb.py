@@ -188,7 +188,12 @@ def _parse_at(mv: memoryview, off: int):
 
 def envelope(buf: bytes):
     """(xmin, ymin, xmax, ymax) of a WKB geometry."""
-    g = parse(buf)
+    return geom_envelope(parse(buf))
+
+
+def geom_envelope(g: Geom):
+    """(xmin, ymin, xmax, ymax) of a parsed geometry.  A ring with a NaN
+    vertex adds no bounds; with none left, all four are NaN (EMPTY)."""
     xmin = ymin = math.inf
     xmax = ymax = -math.inf
     has_points = False

@@ -8,14 +8,18 @@ check_fixes      -> core/check_fixes.py:27-318 (re-write applying fixes)
 inspect_*        -> core/inspect.py, core/metadata_utils.py
 
 All footer work is driver-side pyarrow (O(1), no Spark job — the
-reference's own rule, core/duckdb_metadata.py); data-dependent checks are
-small Spark aggregates.
+reference's own rule, core/duckdb_metadata.py).  ``validate``'s
+data-dependent checks read a bounded sample on the driver with pyarrow
+too, so it starts no Spark job.
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import itertools
+import math
 import os
+import struct
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -165,41 +169,64 @@ def _check_covering(geo: GeoMeta, schema) -> list[str]:
     return errors
 
 
-def _check_wkb_encoding_sample(files: list[str], gcol: str,
-                               sample_rows: int) -> list[str]:
-    """Sampled WKB well-formedness: byte-order marker + known geometry type
-    code (reference: core/validate.py:507-584) — driver-side pyarrow, no
-    Spark job."""
-    taken = 0
-    for f in files:
-        if taken >= sample_rows:
-            break
-        pf = pq.ParquetFile(f)
-        if gcol not in pf.schema_arrow.names:
-            continue
-        batch = next(pf.iter_batches(batch_size=min(sample_rows - taken, 8192),
-                                     columns=[gcol]), None)
-        if batch is None:
-            continue
-        for blob in batch.column(0):
-            b = blob.as_py()
-            if b is None:
+def _sample_values(files: list[str], footers: list, gcol: str):
+    """Non-null ``gcol`` values in file order (sorted paths), batches in
+    order — ``validate``'s sample is the first ``sample_rows`` of them."""
+    for f, md in zip(files, footers):
+        with pq.ParquetFile(f, metadata=md) as pf:
+            if gcol not in pf.schema_arrow.names:
                 continue
-            taken += 1
-            if len(b) < 5:
-                return [f"column {gcol}: WKB blob shorter than 5 bytes"]
-            order = b[0]
-            if order not in (0, 1):
-                return [f"column {gcol}: invalid WKB byte-order marker {order}"]
-            code = int.from_bytes(b[1:5], "little" if order == 1 else "big")
-            # strip EWKB dimension/SRID flags, then ISO thousands (Z/M/ZM)
-            plain = code & 0x0FFFFFFF
-            if not (1 <= plain % 1000 <= 7 and plain // 1000 in (0, 1, 2, 3)):
-                return [f"column {gcol}: unknown WKB geometry type code {code}"]
-    return []
+            for batch in pf.iter_batches(batch_size=8192, columns=[gcol]):
+                yield from (b for b in batch.column(0).to_pylist() if b is not None)
 
 
-def _check_per_file_bboxes(files: list[str], geo: GeoMeta) -> list[str]:
+def _check_wkb_sample(files: list[str], footers: list, gcol: str,
+                      sample_rows: int) -> tuple[list[str], set[str], tuple | None]:
+    """One driver-side pass over the sample, one WKB parse per value:
+    byte-order marker + known type code (reference: core/validate.py:
+    507-584), then the base type names (``wkb.Geom.type_name``, as
+    ``st_geometrytype`` reports them) and the sample envelope (None when
+    no value has bounds, as a Spark ``min`` over NULLs).  Returns
+    ``(errors, types, envelope)``; a marker error anywhere in the sample
+    wins over a parse error, and the caller stops on either."""
+    from geoparquet_io_spark.functions import wkb as _wkb
+
+    types: set[str] = set()
+    lo_x = lo_y = math.inf
+    hi_x = hi_y = -math.inf
+    have = False
+    unparseable = None
+    for b in itertools.islice(_sample_values(files, footers, gcol), sample_rows):
+        if len(b) < 5:
+            return [f"column {gcol}: WKB blob shorter than 5 bytes"], types, None
+        order = b[0]
+        if order not in (0, 1):
+            return [f"column {gcol}: invalid WKB byte-order marker {order}"], types, None
+        code = int.from_bytes(b[1:5], "little" if order == 1 else "big")
+        # strip EWKB dimension/SRID flags, then ISO thousands (Z/M/ZM)
+        plain = code & 0x0FFFFFFF
+        if not (1 <= plain % 1000 <= 7 and plain // 1000 in (0, 1, 2, 3)):
+            return [f"column {gcol}: unknown WKB geometry type code {code}"], types, None
+        if unparseable:
+            continue
+        try:
+            g = _wkb.parse(b)
+        except (ValueError, IndexError, struct.error) as ex:
+            unparseable = f"column {gcol}: unparseable WKB ({ex})"
+            continue
+        types.add(g.type_name)
+        x0, y0, x1, y1 = _wkb.geom_envelope(g)
+        if x0 == x0:     # NaN: EMPTY, no bounds
+            have = True
+            lo_x, lo_y = min(lo_x, x0), min(lo_y, y0)
+            hi_x, hi_y = max(hi_x, x1), max(hi_y, y1)
+    if unparseable:
+        return [unparseable], types, None
+    return [], types, ((lo_x, lo_y, hi_x, hi_y) if have else None)
+
+
+def _check_per_file_bboxes(files: list[str], footers: list,
+                           geo: GeoMeta) -> list[str]:
     """EVERY file whose footer declares a bbox must actually contain its
     data (reference: core/validate.py:778-819 runs per file; checking only
     the first file misses corrupt partitions).  Uses the covering column's
@@ -210,14 +237,13 @@ def _check_per_file_bboxes(files: list[str], geo: GeoMeta) -> list[str]:
     if not paths:
         return errors
     cov_col = paths["xmin"][0]
-    for f in files:
-        g = GeoMeta.from_footer(pq.read_schema(f).metadata)
+    for f, md in zip(files, footers):
+        g = GeoMeta.from_footer(md.metadata)
         if g is None or g.primary.bbox is None:
             continue
         from geoparquet_io_spark.meta import bbox_2d
 
         bx = bbox_2d(g.primary.bbox)   # 3D footers compare planar parts
-        md = pq.read_metadata(f)
         lo_x = lo_y = float("inf")
         hi_x = hi_y = float("-inf")
         have = False
@@ -254,7 +280,12 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
     """GeoParquet spec checks on a written file: metadata shape, physical
     schema, covering verification, WKB well-formedness, per-file bbox
     containment, orientation, CRS bounds, data-vs-metadata
-    (core/validate.py ported to this engine's data model)."""
+    (core/validate.py ported to this engine's data model).
+
+    Driver-side pyarrow throughout; no Spark job (``spark`` is unused).
+    The data-vs-metadata checks read the first ``sample_rows`` non-null
+    geometries (files in sorted order) and parse each once: marker,
+    declared types, footer bbox containment and geographic CRS range."""
     files = _files(path)
     if not files:
         return [f"no parquet files at {path}"]
@@ -280,7 +311,9 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
                 f"{os.path.basename(stray[0])!r})")
     elif not path.endswith(".parquet"):
         notices.append("data file lacks the .parquet extension")
-    schema = pq.read_schema(files[0])
+    # one footer read per file: schema, per-file bbox, sample, orientation
+    footers = [pq.read_metadata(f) for f in files]
+    schema = footers[0].schema.to_arrow_schema()
     # dataset-level geo: per-file bboxes UNIONED (a single file's footer
     # understates a multi-file dataset's extent)
     from geoparquet_io_spark.sources.geoparquet import read_footer_geo
@@ -302,20 +335,13 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
     errors.extend(_check_covering(geo, schema))
     if errors:
         return notices + errors
-    errors.extend(_check_wkb_encoding_sample(files, geo.primary_column, sample_rows))
+    gcol = geo.primary_column
+    errors, seen, env = _check_wkb_sample(files, footers, gcol, sample_rows)
     if errors:
         # unparseable WKB: downstream data checks can't run
         return notices + errors
-    errors.extend(_check_per_file_bboxes(files, geo))
-    # data-vs-metadata on a sample: geometry parses, types match, bbox contains data
-    from geoparquet_io_spark.functions import geom as G
-
-    gcol = geo.primary_column
-    # read the explicit parquet list, not the directory: a stray
-    # non-parquet file in the dir would crash Spark's footer reader
-    df = spark.read.parquet(*files).select(gcol).limit(sample_rows)
-    types_rows = df.select(G.st_geometrytype(F.col(gcol)).alias("t")).distinct().collect()
-    seen = {r["t"] for r in types_rows if r["t"] is not None}
+    errors.extend(_check_per_file_bboxes(files, footers, geo))
+    # data-vs-metadata on the sample: types match, bbox contains data
     declared = set(geo.primary.geometry_types)
     if declared:
         mapped = {
@@ -323,42 +349,30 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
             "MULTIPOINT": "MultiPoint", "MULTILINESTRING": "MultiLineString",
             "MULTIPOLYGON": "MultiPolygon", "GEOMETRYCOLLECTION": "GeometryCollection",
         }
-        # st_geometrytype reports the BASE type; the spec allows declared
+        # the sample reports the BASE type; the spec allows declared
         # entries with dimension suffixes ("Polygon Z") — compare bases so
         # a compliant 3D file is not flagged
         declared_base = {t.split(" ")[0] for t in declared}
         undeclared = {mapped.get(t, t) for t in seen} - declared_base
         if undeclared:
             errors.append(f"data contains undeclared geometry types: {sorted(undeclared)}")
-    from geoparquet_io_spark.functions import crs as _crs
-
-    need_env = bool(geo.primary.bbox) or _crs.is_geographic(
-        geo.primary.crs or _crs.DEFAULT_CRS)
-    env = None
-    if need_env:
-        env = df.select(G.st_envelope_struct(F.col(gcol)).alias("e")).agg(
-            F.min("e.xmin").alias("xmin"), F.min("e.ymin").alias("ymin"),
-            F.max("e.xmax").alias("xmax"), F.max("e.ymax").alias("ymax"),
-        ).collect()[0]
     if geo.primary.bbox and env is not None:
         from geoparquet_io_spark.meta import bbox_2d
 
         bx = bbox_2d(geo.primary.bbox)   # 3D footer: planar containment
-        if env["xmin"] is not None and (
-            env["xmin"] < bx[0] or env["ymin"] < bx[1]
-            or env["xmax"] > bx[2] or env["ymax"] > bx[3]
-        ):
+        if (env[0] < bx[0] or env[1] < bx[1]
+                or env[2] > bx[2] or env[3] > bx[3]):
             errors.append("metadata bbox does not contain the data extent")
     # geographic CRS -> coordinates must stay in lon/lat range
     # (reference: core/validate.py:2093-2120)
+    from geoparquet_io_spark.functions import crs as _crs
+
     if env is not None and _crs.is_geographic(geo.primary.crs or _crs.DEFAULT_CRS):
-        if env["xmin"] is not None and (
-            env["xmin"] < -180.0 or env["xmax"] > 180.0
-            or env["ymin"] < -90.0 or env["ymax"] > 90.0
-        ):
+        xmin, ymin, xmax, ymax = env
+        if xmin < -180.0 or xmax > 180.0 or ymin < -90.0 or ymax > 90.0:
             errors.append(
                 "coordinates exceed geographic CRS bounds "
-                f"([{env['xmin']}, {env['ymin']}, {env['xmax']}, {env['ymax']}] "
+                f"([{xmin}, {ymin}, {xmax}, {ymax}] "
                 "outside [-180, -90, 180, 90])")
     # declared orientation must match the data: counterclockwise exterior
     # rings have positive shoelace area (reference: core/validate.py:682-778)
@@ -366,9 +380,9 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
         from geoparquet_io_spark.functions import wkb as _wkb
 
         bad = 0
-        for f in files:
-            pf = pq.ParquetFile(f)
-            batch = next(pf.iter_batches(batch_size=2048, columns=[gcol]), None)
+        for f, md in zip(files, footers):
+            with pq.ParquetFile(f, metadata=md) as pf:
+                batch = next(pf.iter_batches(batch_size=2048, columns=[gcol]), None)
             if batch is None:
                 continue
             for blob in batch.column(0):
