@@ -156,9 +156,12 @@ def cmd_inspect(args) -> int:
         # cli/main.py:1902): geo JSON, other key-value pairs, schema
         import pyarrow.parquet as _pq
 
-        from geoparquet_io_spark.operators.inspect_check import _files
+        from geoparquet_io_spark.sources.geoparquet import dataset_files
 
-        f0 = _files(args.input)[0]
+        files = dataset_files(args.input)
+        if not files:
+            raise FileNotFoundError(args.input)   # as inspect summary does
+        f0 = files[0]
         schema = _pq.read_schema(f0)
         kv = {k.decode(): v.decode(errors="replace")
               for k, v in (schema.metadata or {}).items()}

@@ -15,7 +15,6 @@ too, so it starts no Spark job.
 
 from __future__ import annotations
 
-import glob as _glob
 import itertools
 import math
 import os
@@ -27,6 +26,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from geoparquet_io_spark.meta import GeoMeta
+from geoparquet_io_spark.sources.geoparquet import (
+    dataset_files,
+    footer_geo,
+    is_hidden,
+    read_footers,
+)
 
 # reference targets (core/check_parquet_structure.py:44-105)
 ROW_GROUP_MIN_ROWS = 10_000
@@ -34,12 +39,6 @@ ROW_GROUP_MAX_ROWS = 200_000
 ROW_GROUP_TARGET_MIN_MB = 64
 ROW_GROUP_TARGET_MAX_MB = 256
 RECOMMENDED_CODEC = "ZSTD"
-
-
-def _files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    return sorted(_glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
 
 
 @dataclass
@@ -61,15 +60,15 @@ class StructureReport:
 
 
 def check_structure(path: str) -> StructureReport:
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         raise FileNotFoundError(path)
     n_groups = 0
     total = 0
     group_rows: list[int] = []
     comps: dict[str, set] = {}
-    for f in files:
-        md = pq.read_metadata(f)
+    footers = read_footers(files)
+    for md in footers:
         total += md.num_rows
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
@@ -78,7 +77,7 @@ def check_structure(path: str) -> StructureReport:
             for c in range(rg.num_columns):
                 col = rg.column(c)
                 comps.setdefault(col.path_in_schema, set()).add(col.compression)
-    geo = GeoMeta.from_footer(pq.read_schema(files[0]).metadata)
+    geo = GeoMeta.from_footer(footers[0].metadata)
     has_cov = bool(geo and geo.primary.covering)
     issues = []
     avg = total / n_groups if n_groups else 0
@@ -286,7 +285,7 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
     The data-vs-metadata checks read the first ``sample_rows`` non-null
     geometries (files in sorted order) and parse each once: marker,
     declared types, footer bbox containment and geographic CRS range."""
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         return [f"no parquet files at {path}"]
     errors: list[str] = []
@@ -294,16 +293,16 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
     # early `if errors: return` on a harmless stray README would skip
     # WKB / bbox / orientation validation entirely)
     notices: list[str] = []
-    # _files() only globs *.parquet, so sweep the directory separately for
-    # data-looking files the validators would otherwise silently skip
-    # (underscore/dot names are parquet-convention markers, not data)
+    # dataset_files() only lists *.parquet, so sweep the directory
+    # separately for data-looking files the validators would otherwise
+    # silently skip, under the same hidden-path rule (_snapshots/,
+    # _SUCCESS and dot-files are metadata, not data)
     if os.path.isdir(path):
-        stray = [
-            os.path.join(r, fn)
-            for r, _, fns in os.walk(path) for fn in fns
-            if not fn.endswith(".parquet")
-            and not fn.startswith(("_", "."))
-        ]
+        stray = []
+        for r, dirs, fns in os.walk(path, followlinks=True):
+            dirs[:] = [d for d in dirs if not is_hidden(d)]
+            stray += [os.path.join(r, fn) for fn in fns
+                      if not fn.endswith(".parquet") and not is_hidden(fn)]
         if stray:
             notices.append(
                 f"{len(stray)} non-.parquet files in the dataset directory "
@@ -311,14 +310,13 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
                 f"{os.path.basename(stray[0])!r})")
     elif not path.endswith(".parquet"):
         notices.append("data file lacks the .parquet extension")
-    # one footer read per file: schema, per-file bbox, sample, orientation
-    footers = [pq.read_metadata(f) for f in files]
+    # one footer read per file: dataset geo, schema, per-file bbox,
+    # sample, orientation
+    footers = read_footers(files)
     schema = footers[0].schema.to_arrow_schema()
     # dataset-level geo: per-file bboxes UNIONED (a single file's footer
     # understates a multi-file dataset's extent)
-    from geoparquet_io_spark.sources.geoparquet import read_footer_geo
-
-    geo = read_footer_geo(path)
+    geo = footer_geo(len(files), iter(footers))
     if geo is None:
         return notices + ["missing 'geo' footer metadata"]
     errors.extend(geo.validate())
@@ -389,7 +387,12 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
                 b = blob.as_py()
                 if b is None:
                     continue
-                g = _wkb.parse(bytes(b))
+                try:
+                    g = _wkb.parse(bytes(b))
+                except (ValueError, IndexError, struct.error) as ex:
+                    # past the sample: reported as the sample pass does
+                    return notices + errors + [
+                        f"column {gcol}: unparseable WKB ({ex})"]
                 polys = ([g] if g.gtype == _wkb.POLYGON
                          else (g.children if g.gtype == _wkb.MULTIPOLYGON else []))
                 for p in polys:
@@ -472,7 +475,7 @@ def check_fixes(spark, path: str, out_path: str, hilbert: bool = False,
         gt2 = gt.add_bbox_metadata("bbox")
         geo_json = gt2.geo.to_json()
         outs = []
-        files = _files(path)   # once — re-globbing per file was O(n^2)
+        files = dataset_files(path)   # once — re-listing per file was O(n^2)
         for f in files:
             dst = out_path if len(files) == 1 else os.path.join(
                 out_path, os.path.relpath(f, path))
@@ -496,19 +499,18 @@ def check_fixes(spark, path: str, out_path: str, hilbert: bool = False,
 
 def inspect_summary(path: str) -> dict:
     """Footer-only summary (reference: core/inspect.py:64-247)."""
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         # same guard as every sibling check_* function — a typo'd path
         # surfaced as a bare IndexError (opaquely, via STAC generation)
         raise FileNotFoundError(path)
-    md = pq.read_metadata(files[0])
-    schema = pq.read_schema(files[0])
-    geo = GeoMeta.from_footer(schema.metadata)
-    mds = [md] + [pq.read_metadata(f) for f in files[1:]]
+    mds = read_footers(files)
+    md = mds[0]
+    geo = GeoMeta.from_footer(md.metadata)
     return {
         "files": len(files),
         "rows": sum(m.num_rows for m in mds),
-        "columns": schema.names,
+        "columns": md.schema.to_arrow_schema().names,
         # dataset-wide like rows/files — first-file-only misled sizing
         "row_groups": sum(m.num_row_groups for m in mds),
         "geo": None if geo is None else {
@@ -566,13 +568,12 @@ ROW_GROUP_MAX_MB = 256
 def check_row_groups(path: str) -> dict:
     """Per-file row-group sizing vs the 64-256 MB / 10k-200k-row guidance
     (reference: core/check_parquet_structure.py:120-214)."""
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         raise FileNotFoundError(path)
     out_files = []
     issues: list[str] = []
-    for f in files:
-        md = pq.read_metadata(f)
+    for f, md in zip(files, read_footers(files)):
         groups = []
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
@@ -606,14 +607,14 @@ def check_row_groups(path: str) -> dict:
 def check_compression(path: str) -> dict:
     """Per-column codec report; flags non-ZSTD geometry columns
     (reference: core/check_parquet_structure.py:444-530)."""
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         raise FileNotFoundError(path)
-    geo = GeoMeta.from_footer(pq.read_schema(files[0]).metadata)
+    footers = read_footers(files)
+    geo = GeoMeta.from_footer(footers[0].metadata)
     geom_cols = set(geo.columns) if geo else set()
     codecs: dict[str, set] = {}
-    for f in files:
-        md = pq.read_metadata(f)
+    for md in footers:
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
             for c in range(rg.num_columns):
@@ -649,13 +650,17 @@ def file_bounds_from_metadata(f: str, bbox_column: str = "bbox"
     None when neither source exists — the caller must fall back to a
     data scan.
     """
+    return _footer_bounds(pq.read_metadata(f), bbox_column)
+
+
+def _footer_bounds(md, bbox_column: str
+                   ) -> tuple[float, float, float, float] | None:
+    """:func:`file_bounds_from_metadata` from an already-read footer."""
     from geoparquet_io_spark.meta import bbox_2d
 
-    pf = pq.ParquetFile(f)
-    g = GeoMeta.from_footer(pf.schema_arrow.metadata)
-    if g is not None and g.primary is not None and g.primary.bbox:
+    g = GeoMeta.from_footer(md.metadata)
+    if g is not None and g.primary.bbox:
         return bbox_2d(g.primary.bbox)
-    md = pf.metadata
     if md.num_rows == 0:
         return None
     want = {f"{bbox_column}.{p}": p for p in ("xmin", "ymin", "xmax", "ymax")}
@@ -685,69 +690,22 @@ def bounds_from_metadata(spark, path: str, bbox_column: str = "bbox"
 
     At 100 TB the bounds pre-pass for a Hilbert/quadkey sort is a full
     column scan if done as an aggregate; this reads each file's footer
-    instead (per-file ``geo`` bbox or bbox-struct row-group statistics)
-    and unions them.  The footer reads fan out on executors like
-    :func:`operators.maintenance.build_manifest`; only file NAMES pass
-    through the driver.  Returns None (caller falls back to
-    ``stats.bounds``) if ANY file lacks metadata bounds — a partial
-    union would silently under-report the envelope.
+    once instead (per-file ``geo`` bbox or bbox-struct row-group
+    statistics) and unions them, on the driver with no Spark job
+    (``spark`` is unused).  Returns None (caller falls back to
+    ``stats.bounds``) if ANY non-empty file lacks metadata bounds — a
+    partial union would silently under-report the envelope.
 
     Reference: the O(1) footer row-count rule (core/duckdb_metadata.py)
     applied to extents.
     """
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         raise FileNotFoundError(path)
-    def _one(f):
-        # empty files have no extent: skip, don't fail the union
-        if pq.ParquetFile(f).metadata.num_rows == 0:
-            return "empty"
-        return file_bounds_from_metadata(f, bbox_column)
-
-    if len(files) <= 8:
-        boxes = [b for b in (_one(f) for f in files) if b != "empty"]
-        if not boxes:
-            return None
-    else:
-        import pandas as pd
-
-        pdf_files = spark.createDataFrame([(f,) for f in files], ["file"]) \
-            .repartition(min(len(files), 64))
-        col = bbox_column
-
-        def sweep(batches):
-            from geoparquet_io_spark.operators.inspect_check import (
-                file_bounds_from_metadata as fb,
-            )
-
-            for pdf in batches:
-                rows = []
-                for f in pdf["file"]:
-                    import pyarrow.parquet as _pq
-
-                    if _pq.ParquetFile(f).metadata.num_rows == 0:
-                        continue
-                    b = fb(f, col)
-                    rows.append(
-                        {"ok": b is not None,
-                         "xmin": b[0] if b else None,
-                         "ymin": b[1] if b else None,
-                         "xmax": b[2] if b else None,
-                         "ymax": b[3] if b else None})
-                yield pd.DataFrame(
-                    rows, columns=["ok", "xmin", "ymin", "xmax", "ymax"])
-
-        agg = pdf_files.mapInPandas(
-            sweep, schema="ok boolean, xmin double, ymin double, "
-                          "xmax double, ymax double") \
-            .agg(F.min("ok").alias("all_ok"),
-                 F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
-                 F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax")) \
-            .collect()[0]
-        if not agg["all_ok"]:
-            return None
-        return (agg["xmin"], agg["ymin"], agg["xmax"], agg["ymax"])
-    if any(b is None for b in boxes):
+    # empty files have no extent: skip, don't fail the union
+    boxes = [_footer_bounds(md, bbox_column)
+             for md in read_footers(files) if md.num_rows]
+    if not boxes or any(b is None for b in boxes):
         return None
     return (min(b[0] for b in boxes), min(b[1] for b in boxes),
             max(b[2] for b in boxes), max(b[3] for b in boxes))
@@ -757,7 +715,7 @@ def check_bbox(path: str) -> dict:
     """Bbox covering assessment: covering metadata present, its struct
     exists and is well-formed, and (spot check) struct values agree with
     the geometry (reference: core/common.py:3346-3420)."""
-    files = _files(path)
+    files = dataset_files(path)
     if not files:
         raise FileNotFoundError(path)
     schema = pq.read_schema(files[0])
@@ -807,7 +765,7 @@ def fix_compression(path: str, out_path: str,
     included) — the fix behind ``check compression --fix`` (reference:
     core/check_fixes.py fix_compression).  Driver-side pyarrow rewrite,
     same as the reference's single-file path."""
-    files = _files(path)
+    files = dataset_files(path)
     if len(files) != 1:
         raise ValueError("fix_compression operates on a single file")
     t = pq.read_table(files[0])
@@ -826,7 +784,7 @@ def fix_row_groups(path: str, out_path: str,
     measured from the EXISTING file's compressed size (no sampling
     needed), clamped to the 10k-200k-row window (reference:
     core/check_fixes.py fix_row_groups)."""
-    files = _files(path)
+    files = dataset_files(path)
     if len(files) != 1:
         raise ValueError("fix_row_groups operates on a single file")
     md = pq.read_metadata(files[0])
@@ -855,7 +813,7 @@ def check_bloom_filters(spark, path: str) -> dict:
     Footer + bloom-header reads only, no Spark job.  Returns
     {ok, files: [{file, row_groups: [{columns: {name: bitset_bytes}}]}],
     columns_with_bloom} — ``ok`` means at least one bloom present."""
-    files = _files(path)
+    files = dataset_files(path)
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     out_files = []

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from geoparquet_io_spark.sources.geoparquet import dataset_files
+
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("file", T.StringType(), False),
     T.StructField("n_rows", T.LongType()),
@@ -37,21 +39,6 @@ MANIFEST_SCHEMA = T.StructType([
     T.StructField("xmax", T.DoubleType()),
     T.StructField("ymax", T.DoubleType()),
 ])
-
-
-def _list_parquet_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    out = []
-    for f in _glob.glob(os.path.join(path, "**", "*.parquet"),
-                        recursive=True):
-        rel = os.path.relpath(f, path)
-        # metadata dirs (_deletes/, _snapshots/, Spark's _temporary/) are
-        # never DATA members
-        if any(part.startswith("_") for part in rel.split(os.sep)[:-1]):
-            continue
-        out.append(f)
-    return sorted(out)
 
 
 def build_manifest(spark: SparkSession, path: str,
@@ -69,7 +56,7 @@ def build_manifest(spark: SparkSession, path: str,
     import pandas as pd
 
     if files is None:
-        files = _list_parquet_files(path)
+        files = dataset_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
 
@@ -179,7 +166,7 @@ def compact(spark: SparkSession, in_path: str, out_path: str,
     (operators/sorts.py:zorder_by, equi-depth buckets)."""
     from geoparquet_io_spark.sources.geoparquet import read, write
 
-    files = _list_parquet_files(in_path)
+    files = dataset_files(in_path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {in_path!r}")
     total_bytes = sum(os.path.getsize(f) for f in files)
@@ -424,7 +411,7 @@ def commit_snapshot(spark: SparkSession, path: str,
             # read back every one of its rows twice
             members = sorted(set(files))
         elif prior is None:
-            members = _list_parquet_files(path)  # bootstrap: all on disk
+            members = dataset_files(path)  # bootstrap: all on disk
         else:
             # prior membership + never-before-referenced files (new
             # appends).  Files only OLDER snapshots reference were
@@ -439,7 +426,7 @@ def commit_snapshot(spark: SparkSession, path: str,
             prior_files = [os.path.join(path, r["file"])
                            for r in prior["files"]]
             new_files = [
-                f for f in _list_parquet_files(path)
+                f for f in dataset_files(path)
                 if os.path.abspath(f) not in ever
                 and not os.path.relpath(f, path).startswith("rewrite-")]
             members = sorted(set(prior_files) | set(new_files))
@@ -627,7 +614,7 @@ def delete_where(spark: SparkSession, path: str, condition,
     keys = gt.df.filter(cond).select(key_column).distinct()
     ddir = os.path.join(path, "_deletes", f"d-{uuid.uuid4().hex[:12]}")
     keys.write.parquet(ddir)
-    new_parts = _glob.glob(os.path.join(ddir, "*.parquet"))
+    new_parts = dataset_files(ddir)
     prior_dels = [os.path.join(path, r["file"])
                   for r in prior.get("delete_files", [])]
     return commit_snapshot(
@@ -694,7 +681,7 @@ def vacuum(path: str, keep_versions: list[int] | None = None,
                 referenced.add(os.path.abspath(os.path.join(path, r["file"])))
     removed_files, removed_snapshots, spared_files = [], [], []
     now = time.time()
-    sweep = _list_parquet_files(path) + _glob.glob(
+    sweep = dataset_files(path) + _glob.glob(
         os.path.join(path, "_deletes", "**", "*.parquet"), recursive=True)
     for f in sweep:
         if os.path.abspath(f) not in referenced:
@@ -734,7 +721,7 @@ def manifest_staleness(manifest: DataFrame, path: str) -> dict:
     would report 'fresh' over a stale bbox).  Names/stat only — no data
     read.  Manifests persisted before mtime_ns existed fall back to
     size-only for that file."""
-    current = {f: os.stat(f) for f in _list_parquet_files(path)}
+    current = {f: os.stat(f) for f in dataset_files(path)}
     has_mtime = "mtime_ns" in manifest.columns
     sel = ["file", "n_bytes"] + (["mtime_ns"] if has_mtime else [])
     recorded = {r["file"]: r for r in manifest.select(*sel).collect()}
@@ -853,7 +840,7 @@ def build_column_manifest(spark: SparkSession, path: str,
     import pandas as pd
 
     if files is None:
-        files = _list_parquet_files(path)
+        files = dataset_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
     schema = T.StructType([

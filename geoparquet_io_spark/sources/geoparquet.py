@@ -83,66 +83,93 @@ def patch_footer_metadata(path: str, updates: dict) -> int:
     return len(footer)
 
 
-def _first_parquet_file(path: str) -> str | None:
+def is_hidden(name: str) -> bool:
+    """Spark's file-index rule for one path component below a dataset
+    root: dot-names and ``_``-names without ``=`` (``_snapshots/``,
+    ``_deletes/``, ``_SUCCESS``) are not data; ``_c=v`` hive dirs are."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def dataset_files(path: str) -> list[str]:
+    """The data files of a dataset, sorted by full path: ``path`` itself
+    when it is a file, else every ``*.parquet`` below it that Spark's
+    reader would read (no component below ``path`` :func:`is_hidden`).
+    The one membership rule for every footer reader, inspect/check,
+    maintenance and the empty-write probe."""
     if os.path.isfile(path):
-        return path
-    hits = sorted(_glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    return hits[0] if hits else None
+        return [path]
+    out = []
+    for root, dirs, names in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if not is_hidden(d)]
+        out += [os.path.join(root, n) for n in names
+                if n.endswith(".parquet") and not is_hidden(n)]
+    return sorted(out)
 
 
-def read_footer_geo(path: str | list[str]) -> GeoMeta | None:
-    """Driver-side footer metadata read — no Spark job
-    (reference reads footers the same way, core/duckdb_metadata.py:61-240).
-
-    After a distributed write with ``per_file_bbox`` each footer carries
-    only its own file's bbox, so for multi-file datasets the per-file
-    bboxes are UNIONED — footer-only reads, fanned out on a thread pool
-    (metadata reads are I/O-bound).  Past ``max_union_files`` the bbox is
-    CLEARED instead of swept: at a 100 TB dataset's file count a driver
-    sweep is minutes of startup latency, and an absent bbox is honest
-    where an understated one (first file only) would be wrong.
-
-    ``path`` may be a single file, a dataset directory (recursive glob),
-    or an explicit file list (snapshot membership reads)."""
-    if isinstance(path, list):
-        files = sorted(path)
-    elif os.path.isfile(path):
-        return GeoMeta.from_footer(pq.read_schema(path).metadata)
-    else:
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.parquet"),
-                                  recursive=True))
-    if not files:
-        return None
-    geo = GeoMeta.from_footer(pq.read_schema(files[0]).metadata)
-    # (GeoMeta.primary never returns None — a missing entry yields a
-    # detached default whose bbox is None, caught just below)
-    if geo is None or len(files) == 1:
-        return geo
-    max_union_files = 1024
-    if geo.primary.bbox is None:
-        return geo
-    if len(files) > max_union_files:
-        geo.ensure_primary().bbox = None
-        return geo
+def read_footers(files: list[str]) -> list["pq.FileMetaData"]:
+    """Each file's ``FileMetaData``, in order: one footer read per file,
+    fanned out on a thread pool (footer reads are I/O-bound)."""
+    if len(files) <= 1:
+        return [pq.read_metadata(f) for f in files]
     from concurrent.futures import ThreadPoolExecutor
 
-    def _bbox(f: str):
-        g = GeoMeta.from_footer(pq.read_schema(f).metadata)
-        return g.primary.bbox if g is not None and g.primary is not None else None
+    with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
+        return list(ex.map(pq.read_metadata, files))
 
-    with ThreadPoolExecutor(max_workers=min(32, len(files) - 1)) as ex:
-        boxes = list(ex.map(_bbox, files[1:]))
+
+_MAX_UNION_FILES = 1024
+
+
+def footer_geo(n_files: int, footers) -> GeoMeta | None:
+    """Dataset-level geo from an iterator over the ``FileMetaData`` of
+    ``n_files`` files in sorted order: the first footer's geo with its
+    primary bbox UNIONED over every file (after a ``per_file_bbox``
+    write each footer carries only its own file's bbox).  Past
+    ``_MAX_UNION_FILES`` the bbox is CLEARED instead of swept: at a
+    100 TB dataset's file count a driver sweep is minutes of startup
+    latency, and an absent bbox is honest where an understated one
+    (first file only) would be wrong.  Pulls a second footer from
+    ``footers`` only when a union is needed."""
     from geoparquet_io_spark.meta import bbox_union
 
+    geo = GeoMeta.from_footer(next(footers).metadata)
+    # (GeoMeta.primary never returns None — a missing entry yields a
+    # detached default whose bbox is None)
+    if geo is None or n_files == 1 or geo.primary.bbox is None:
+        return geo
+    if n_files > _MAX_UNION_FILES:
+        geo.ensure_primary().bbox = None
+        return geo
     union = geo.primary.bbox
-    for b in boxes:
+    for md in footers:
+        g = GeoMeta.from_footer(md.metadata)
         # spec-aware union: 3D+3D keeps Z, mixed projects to 2D — the
         # positional 4-tuple union read a 3D file's zmin as xmax
-        union = bbox_union(union, b)
+        union = bbox_union(union, g.primary.bbox if g is not None else None)
         if union is None:
             break
     geo.ensure_primary().bbox = union
     return geo
+
+
+def read_footer_geo(path: str | list[str]) -> GeoMeta | None:
+    """Driver-side footer metadata read — no Spark job
+    (reference reads footers the same way, core/duckdb_metadata.py:61-240):
+    :func:`footer_geo` over the dataset's footers, the rest read only
+    when the first footer's bbox needs a union.
+
+    ``path`` may be a single file, a dataset directory
+    (:func:`dataset_files`), or an explicit file list (snapshot
+    membership reads)."""
+    files = sorted(path) if isinstance(path, list) else dataset_files(path)
+    if not files:
+        return None
+
+    def footers():
+        yield pq.read_metadata(files[0])
+        yield from read_footers(files[1:])
+
+    return footer_geo(len(files), footers())
 
 
 def _geo_from_arrow_extensions(schema: "pa.Schema") -> GeoMeta | None:
@@ -188,11 +215,10 @@ def read(spark: SparkSession, path: str, geometry_column: str | None = None):
     from geoparquet_io_spark.geotable import GeoTable
 
     df = spark.read.parquet(path)
-    geo = read_footer_geo(path)
-    if geo is None:
-        f = _first_parquet_file(path)
-        if f is not None:
-            geo = _geo_from_arrow_extensions(pq.read_schema(f))
+    files = dataset_files(path)
+    geo = read_footer_geo(files)
+    if geo is None and files:
+        geo = _geo_from_arrow_extensions(pq.read_schema(files[0]))
     if geo is None and geometry_column:
         geo = GeoMeta(primary_column=geometry_column,
                       columns={geometry_column: GeoColumnMeta()})
@@ -242,10 +268,7 @@ def _cast_null_partition_types(df: DataFrame, path: str) -> DataFrame:
     top = _glob.glob(os.path.join(path, "*=__HIVE_DEFAULT_PARTITION__"))
     if not top:
         return df
-    probe = []
-    for d in sorted(top):
-        probe += _glob.glob(os.path.join(d, "**", "*.parquet"),
-                            recursive=True)
+    probe = [f for d in sorted(top) for f in dataset_files(d)]
     # the schema-only file carries a filename MARKER so it is found by
     # name, not by sort order (r8 ADVICE: data files share the
     # part-NNNNN-{uuid} shape, and with >64 null-partition data files
@@ -618,7 +641,7 @@ def _write_distributed(
                 )
                 os.makedirs(d, exist_ok=True)
             # dot-prefixed while in flight: parquet readers (Spark,
-            # pyarrow.dataset, this repo's _files()) skip dot-files, so a
+            # pyarrow.dataset, dataset_files()) skip dot-files, so a
             # failed or speculative task attempt can never leak a partial
             # or duplicate file into reads — the driver renames the
             # manifest's survivors to their visible names after collect()
@@ -808,9 +831,7 @@ def _write_distributed(
         # complete no-op: writing the schema-only default-partition file
         # here would add a phantom null partition plus per-read probe
         # cost to a perfectly healthy dataset (r8 review)
-        existing = _glob.glob(os.path.join(path, "**", "*.parquet"),
-                              recursive=True)
-        if any(not os.path.basename(f).startswith(".") for f in existing):
+        if dataset_files(path):
             return []
         # zero input rows (a filter matching nothing is a normal pipeline
         # outcome): emit ONE schema-only file so the dataset stays
@@ -893,4 +914,4 @@ def write_bloom(df: DataFrame, path: str, bloom_columns: list[str],
         if ndv is not None:
             w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(ndv))
     w.mode(mode).parquet(path)
-    return sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    return dataset_files(path)

@@ -49,10 +49,14 @@ def test_partition_cli(src, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out)["files"] >= 3
 
 
-def test_inspect_summary(src, capsys):
+def test_inspect_summary(src, capsys, tmp_path):
     assert _run(["inspect", "summary", src]) == 0
     s = json.loads(capsys.readouterr().out)
     assert s["rows"] == 1000 and s["geo"]["primary_column"] == "geometry"
+    # an empty directory is a missing dataset for every footer verb
+    for what in ("summary", "meta"):
+        with pytest.raises(FileNotFoundError):
+            _run(["inspect", what, str(tmp_path)])
 
 
 def test_convert_csv(tmp_path, capsys):

@@ -579,11 +579,18 @@ def test_bounds_metadata_distributed_sweep(spark, tmp_path):
         bounds_from_metadata,
     )
 
-    for i in range(12):  # > 8 files takes the executor-sweep path
+    for i in range(12):  # every file count reads its footers on the driver
         _bbox_file(str(tmp_path / f"f{i:02d}.parquet"),
                    [float(i)], [float(-i)])
-    assert bounds_from_metadata(spark, str(tmp_path)) == \
-        (0.0, -11.0, 11.0, 0.0)
+    sc = spark.sparkContext
+    group = "bounds-metadata-no-jobs"
+    sc.setJobGroup(group, "bounds_from_metadata")
+    try:
+        assert bounds_from_metadata(spark, str(tmp_path)) == \
+            (0.0, -11.0, 11.0, 0.0)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_bounds_metadata_prefers_footer_geo_bbox(spark, tmp_path):

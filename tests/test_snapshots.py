@@ -11,8 +11,8 @@ from geoparquet_io_spark.operators.maintenance import (
     read_snapshot,
     snapshot_history,
     vacuum,
-    _list_parquet_files,
 )
+from geoparquet_io_spark.sources.geoparquet import dataset_files
 
 
 def _write_batch(spark, path, lo, hi):
@@ -43,7 +43,7 @@ def test_tampered_member_is_hard_error(spark, tmp_path):
     p = str(tmp_path / "ds")
     _write_batch(spark, p, 0, 50)
     commit_snapshot(spark, p)
-    f = _list_parquet_files(p)[0]
+    f = dataset_files(p)[0]
     with open(f, "ab") as fh:
         fh.write(b"junk")
     with pytest.raises(RuntimeError, match="changed on disk"):
@@ -56,11 +56,11 @@ def test_replace_commit_and_vacuum(spark, tmp_path):
     _write_batch(spark, p, 100, 200)
     commit_snapshot(spark, p)  # v1: two files
     # logical REPLACE: compacted rewrite into the same dataset dir
-    old_files = _list_parquet_files(p)
+    old_files = dataset_files(p)
     df = spark.read.parquet(*old_files).coalesce(1)
     sub = str(tmp_path / "ds" / "compacted")
     df.write.parquet(sub)
-    new_files = _list_parquet_files(sub)
+    new_files = dataset_files(sub)
     rec2 = commit_snapshot(spark, p, files=new_files, note="compacted")
     assert rec2["n_files"] == len(new_files)
     assert read_snapshot(spark, p, 2).df.count() == 200
@@ -197,14 +197,11 @@ def test_read_snapshot_detects_same_size_overwrite(spark, tmp_path):
 def test_commit_snapshot_reuse_skips_footer_reads(spark, tmp_path):
     """Incremental commit: files matching the prior record's size+mtime
     reuse its stats; totals still correct after an append."""
-    from geoparquet_io_spark.operators.maintenance import \
-        _list_parquet_files
-
     p = str(tmp_path / "ds")
     spark.range(50).repartition(2).write.parquet(p)
     v1 = commit_snapshot(spark, p)
     spark.range(50, 70).repartition(1).write.mode("append").parquet(p)
-    v2 = commit_snapshot(spark, p, files=_list_parquet_files(p), reuse=v1)
+    v2 = commit_snapshot(spark, p, files=dataset_files(p), reuse=v1)
     assert v2["n_rows"] == 70
     assert v2["n_files"] == v1["n_files"] + 1
     # the reused members carry identical stats records
@@ -496,9 +493,9 @@ def test_commit_snapshot_lost_race_rederives_membership(spark, tmp_path,
     p = str(tmp_path / "ds")
     _write_batch(spark, p, 0, 50)
     commit_snapshot(spark, p, note="v1")
-    files_v1 = set(_list_parquet_files(p))
+    files_v1 = set(dataset_files(p))
     _write_batch(spark, p, 50, 90)           # loser's append (file b)
-    loser_new = set(_list_parquet_files(p)) - files_v1
+    loser_new = set(dataset_files(p)) - files_v1
 
     calls = {"n": 0}
     real_link = os.link
@@ -510,7 +507,7 @@ def test_commit_snapshot_lost_race_rederives_membership(spark, tmp_path,
             # a file the loser has never seen
             (spark.range(1000, 1100).withColumn("v", F.col("id"))
              .coalesce(1).write.mode("append").parquet(p))
-            winner_new = (set(_list_parquet_files(p)) - files_v1
+            winner_new = (set(dataset_files(p)) - files_v1
                           - loser_new)
             hist = snapshot_history(p)
             rec = dict(hist[-1])
@@ -550,7 +547,7 @@ def test_explicit_files_commit_race_raises_not_lost_update(
     p = str(tmp_path / "ds")
     _write_batch(spark, p, 0, 5)
     commit_snapshot(spark, p, note="v1")
-    files = _list_parquet_files(p)
+    files = dataset_files(p)
     real_link, raced = os.link, []
 
     def lose_once(src, dst):
@@ -573,7 +570,7 @@ def test_commit_snapshot_dedupes_explicit_files(spark, tmp_path):
     back duplicated rows."""
     p = str(tmp_path / "ds")
     _write_batch(spark, p, 0, 7)
-    f = _list_parquet_files(p)
+    f = dataset_files(p)
     rec = commit_snapshot(spark, p, files=f + f, note="dup list")
     assert rec["n_files"] == len(f)
     assert read_snapshot(spark, p, rec["version"]).count() == 7

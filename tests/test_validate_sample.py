@@ -24,15 +24,19 @@ from geoparquet_io_spark.operators.inspect_check import (
 EMPTY_POINT = W.encode_point(math.nan, math.nan)
 
 
-def _write(path, values, bbox=None, crs=None, types=("Point",), covering=False):
+def _write(path, values, bbox=None, crs=None, types=("Point",), covering=False,
+           orientation=None):
     """One GeoParquet file with WKB ``values`` (None = NULL geometry);
-    the footer declares ``bbox`` / ``crs`` when given.  ``covering`` adds a
-    bbox struct column (from the values) registered as the covering."""
+    the footer declares ``bbox`` / ``crs`` / ``orientation`` when given.
+    ``covering`` adds a bbox struct column (from the values) registered as
+    the covering."""
     col = {"encoding": "WKB", "geometry_types": list(types)}
     if bbox is not None:
         col["bbox"] = list(bbox)
     if crs is not None:
         col["crs"] = crs
+    if orientation is not None:
+        col["orientation"] = orientation
     cols = {"id": pa.array(range(len(values)), pa.int64()),
             "geometry": pa.array(values, pa.binary())}
     if covering:
@@ -148,6 +152,21 @@ def test_validate_reports_truncated_wkb(spark, tmp_path):
                [W.encode_polygon(_square(0.0, 0.0)), truncated],
                bbox=[5.0, 5.0, 6.0, 6.0], types=["Point"])
     assert validate(spark, f) == [
+        "column geometry: unparseable WKB (buffer is smaller than requested size)"]
+
+
+def test_validate_reports_truncated_wkb_past_the_sample(spark, tmp_path):
+    """The orientation pass reads past the sample: a truncated polygon in
+    the second file is reported with the sample pass's message, not
+    raised."""
+    truncated = struct.pack("<BIII", 1, 3, 1, 4) + struct.pack("<4d", 0, 0, 1, 0)
+    d = tmp_path / "ds"
+    d.mkdir()
+    good = [W.encode_polygon(_square(float(k), 0.0)) for k in range(6)]
+    _write(d / "a.parquet", good, types=["Polygon"], orientation="counterclockwise")
+    _write(d / "b.parquet", [good[0], truncated], types=["Polygon"],
+           orientation="counterclockwise")
+    assert validate(spark, str(d), sample_rows=5) == [
         "column geometry: unparseable WKB (buffer is smaller than requested size)"]
 
 
