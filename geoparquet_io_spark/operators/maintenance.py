@@ -3,8 +3,9 @@
 Two operational primitives a 100 TB GeoParquet lake needs that the
 single-file reference never faced:
 
-- **Manifest / file skipping**: a distributed footer sweep producing a
-  tiny (file, rows, bytes, bbox) table.  A spatial query then prunes at
+- **Manifest / file skipping**: one pooled driver read of every footer
+  (sources/geoparquet.py:read_footers) producing a tiny (file, rows,
+  bytes, bbox) table.  A spatial query then prunes at
   FILE granularity before Spark ever lists row groups — the Iceberg/
   Delta zone-map idea expressed over plain GeoParquet footers (this
   repo's writers already stamp a per-file bbox,
@@ -21,13 +22,13 @@ from __future__ import annotations
 import glob as _glob
 import math
 import os
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geoparquet_io_spark.sources.geoparquet import dataset_files
+from geoparquet_io_spark.meta import GeoMeta, bbox_2d
+from geoparquet_io_spark.sources.geoparquet import dataset_files, read_footers
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("file", T.StringType(), False),
@@ -43,64 +44,30 @@ MANIFEST_SCHEMA = T.StructType([
 
 def build_manifest(spark: SparkSession, path: str,
                    files: list[str] | None = None) -> DataFrame:
-    """Distributed footer sweep -> manifest DataFrame (one row per file).
+    """Footer read -> manifest DataFrame (one row per file).
 
-    The file LIST goes through the driver (names only — bounded); the
-    footer READS run on executors via mapInPandas, so a million-file
-    dataset sweeps in parallel instead of serially on the driver.
+    Every footer is read on the driver, once, through
+    :func:`read_footers` (pooled, no Spark job), when this is called.
     bbox columns are NULL when a footer has no geo bbox.  Persist the
     result next to the dataset and refresh incrementally on ingest
-    (``files`` restricts the sweep to an explicit list — the
+    (``files`` restricts the read to an explicit list — the
     :func:`refresh_manifest` increment).
     """
-    import pandas as pd
-
     if files is None:
         files = dataset_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
-
-    paths_df = spark.createDataFrame([(f,) for f in files], ["file"]) \
-        .repartition(min(len(files), 64))
-
-    def sweep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        from geoparquet_io_spark.meta import GeoMeta
-
-        for pdf in batches:
-            rows = []
-            for f in pdf["file"]:
-                pf = pq.ParquetFile(f)
-                md = pf.metadata
-                bbox = None
-                g = GeoMeta.from_footer(pf.schema_arrow.metadata)
-                if g is not None and g.primary is not None:
-                    bbox = g.primary.bbox
-                # GeoParquet bbox is [xmin,ymin,xmax,ymax] in 2D and
-                # [xmin,ymin,zmin,xmax,ymax,zmax] in 3D — reading the
-                # 3D form positionally would record zmin as xmax and
-                # prune files that DO intersect the query
-                if bbox and len(bbox) == 6:
-                    bb = (bbox[0], bbox[1], bbox[3], bbox[4])
-                elif bbox:
-                    bb = (bbox[0], bbox[1], bbox[2], bbox[3])
-                else:
-                    bb = None
-                st = os.stat(f)
-                rows.append({
-                    "file": f,
-                    "n_rows": md.num_rows,
-                    "n_bytes": st.st_size,
-                    "mtime_ns": st.st_mtime_ns,
-                    "xmin": bb[0] if bb else None,
-                    "ymin": bb[1] if bb else None,
-                    "xmax": bb[2] if bb else None,
-                    "ymax": bb[3] if bb else None,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in MANIFEST_SCHEMA])
-
-    return paths_df.mapInPandas(sweep, schema=MANIFEST_SCHEMA)
+    rows = []
+    for f, md in zip(files, read_footers(files)):
+        g = GeoMeta.from_footer(md.metadata)
+        # planar view of a 2D or 3D footer bbox; float(): footer JSON
+        # may hold integers, which a DoubleType field refuses
+        bb = bbox_2d(g.primary.bbox) if g is not None else None
+        xmin, ymin, xmax, ymax = map(float, bb) if bb else (None,) * 4
+        st = os.stat(f)
+        rows.append((f, md.num_rows, st.st_size, st.st_mtime_ns,
+                     xmin, ymin, xmax, ymax))
+    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
 
 
 def prune_files(manifest: DataFrame,
@@ -192,16 +159,16 @@ def compact(spark: SparkSession, in_path: str, out_path: str,
 def refresh_manifest(spark: SparkSession, manifest: DataFrame,
                      path: str) -> tuple[DataFrame, dict]:
     """Incrementally refresh a persisted manifest against the dataset's
-    current file listing: footer-sweep ONLY added/resized files, drop
-    removed rows, keep everything else untouched.  On a 100 TB lake a
-    daily ingest adds a handful of files — re-sweeping a million
+    current file listing: read the footers of ONLY added/resized files,
+    drop removed rows, keep everything else untouched.  On a 100 TB lake
+    a daily ingest adds a handful of files — re-reading a million
     untouched footers (what ``build_manifest`` would do) is the wrong
     cost model; this is the metadata-maintenance increment.
 
     Returns (fresh manifest DataFrame, report) where report mirrors
     :func:`manifest_staleness` plus ``files_swept``.  Names/sizes drive
     the diff (driver-side, names only); only the changed files' footers
-    are read, distributed."""
+    are read, through :func:`build_manifest`."""
     stale = manifest_staleness(manifest, path)
     to_sweep = sorted(set(stale["files_added"]) | set(stale["files_resized"]))
     drop = set(stale["files_removed"]) | set(stale["files_resized"])
@@ -329,9 +296,9 @@ def commit_snapshot(spark: SparkSession, path: str,
     re-insert).  Pass ``delete_files=[]`` to explicitly clear (what
     ``apply_deletes`` does after folding).
 
-    Scale shape: footer row counts come from the distributed
-    ``build_manifest`` sweep (executor-side); only file NAMES and the
-    tiny manifest rows touch the driver.  The snapshot JSON is
+    Scale shape: footer row counts come from one pooled driver read of
+    the footers not already known (:func:`read_footers`, no Spark job,
+    whatever the file count).  The snapshot JSON is
     published via ``os.link`` from a private tmp file — atomic for
     readers (never a torn file) AND exclusive for writers: two
     concurrent committers racing to the same version number cannot
@@ -365,8 +332,6 @@ def commit_snapshot(spark: SparkSession, path: str,
     stat_cache: dict[str, tuple[int, int, int]] = {}
 
     def _stat_members(members: list[str]) -> None:
-        import pyarrow.parquet as pq
-
         todo = []
         for f in members:
             st = os.stat(f)
@@ -379,20 +344,8 @@ def commit_snapshot(spark: SparkSession, path: str,
                 stat_cache[f] = (r["n_rows"], r["n_bytes"], r["mtime_ns"])
             else:
                 todo.append((f, st))
-        # distributed footer sweep for big memberships; tiny commits
-        # (and the streaming reuse path) read driver-side — no job for
-        # a 3-file micro-batch
-        if len(todo) > 64:
-            mf = build_manifest(spark, path, files=[f for f, _ in todo])
-            rows = {r["file"]: (r["n_rows"], r["n_bytes"])
-                    for r in mf.select("file", "n_rows", "n_bytes").collect()}
-            for f, st in todo:
-                n_rows, n_bytes = rows[f]
-                stat_cache[f] = (int(n_rows), int(n_bytes), st.st_mtime_ns)
-        else:
-            for f, st in todo:
-                stat_cache[f] = (pq.ParquetFile(f).metadata.num_rows,
-                                 st.st_size, st.st_mtime_ns)
+        for (f, st), md in zip(todo, read_footers([f for f, _ in todo])):
+            stat_cache[f] = (md.num_rows, st.st_size, st.st_mtime_ns)
 
     for _attempt in range(64):
         # EVERY attempt derives membership and inherited deletes from
@@ -830,14 +783,15 @@ def merge_into(spark: SparkSession, path: str, changes: DataFrame,
 def build_column_manifest(spark: SparkSession, path: str,
                           columns: list[str],
                           files: list[str] | None = None) -> DataFrame:
-    """Distributed footer sweep -> per-file ZONE MAP for arbitrary
+    """Footer read -> per-file ZONE MAP for arbitrary
     columns: (file, n_rows, col, min, max, null_count), min/max as
     strings with a type tag (numeric values compare numerically in
     :func:`prune_files_where`).  The generalization of the bbox
     manifest: parquet row-group statistics aggregated to file level, no
     data pages read — the Iceberg/Delta column-stats idea over plain
-    parquet."""
-    import pandas as pd
+    parquet.  Footers are read on the driver, once, through
+    :func:`read_footers` (no Spark job), when this is called."""
+    from decimal import Decimal
 
     if files is None:
         files = dataset_files(path)
@@ -852,74 +806,51 @@ def build_column_manifest(spark: SparkSession, path: str,
         T.StructField("null_count", T.LongType()),
         T.StructField("numeric", T.BooleanType()),
     ])
-    paths_df = spark.createDataFrame([(f,) for f in files], ["file"]) \
-        .repartition(min(len(files), 64))
-    want = list(columns)
-
-    def sweep(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from decimal import Decimal
-
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for f in pdf["file"]:
-                md = pq.ParquetFile(f).metadata
-                idx = {md.schema.column(i).path: i
-                       for i in range(md.num_columns)}
-                for col in want:
-                    if col not in idx:
-                        rows.append({"file": f, "n_rows": md.num_rows,
-                                     "column": col, "vmin": None,
-                                     "vmax": None, "null_count": None,
-                                     "numeric": None})
-                        continue
-                    vmin = vmax = None
-                    nulls = 0
-                    numeric = None
-                    ok = True
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx[col]).statistics
-                        if st is None or not st.has_min_max:
-                            ok = False
-                            break
-                        try:
-                            # pyarrow raises ArrowNotImplementedError
-                            # for physical types it can't cast (e.g.
-                            # FIXED_LEN_BYTE_ARRAY decimals from other
-                            # writers) — degrade to no-stats, which
-                            # keeps the file (conservative), instead
-                            # of failing the whole sweep
-                            mn, mx = st.min, st.max
-                        except Exception:
-                            ok = False
-                            break
-                        # DECIMAL stats come back as decimal.Decimal —
-                        # they must be tagged numeric, or the pruner
-                        # would compare '2.50' vs '10' as strings and
-                        # wrongly skip files (lost rows)
-                        numeric = isinstance(mn, (int, float, Decimal)) \
-                            and not isinstance(mn, bool)
-                        if vmin is None or (mn < vmin):
-                            vmin = mn
-                        if vmax is None or (mx > vmax):
-                            vmax = mx
-                        nulls += st.null_count or 0
-                    # str() round-trips int/float (== repr in py3) and
-                    # keeps Decimal exact ('2.50', not "Decimal('2.50')")
-                    rows.append({
-                        "file": f, "n_rows": md.num_rows, "column": col,
-                        "vmin": None if vmin is None else str(vmin),
-                        "vmax": None if vmax is None else str(vmax),
-                        "null_count": nulls if ok else None,
-                        "numeric": numeric,
-                    } if ok else {
-                        "file": f, "n_rows": md.num_rows, "column": col,
-                        "vmin": None, "vmax": None, "null_count": None,
-                        "numeric": None})
-            yield pd.DataFrame(rows, columns=[s.name for s in schema])
-
-    return paths_df.mapInPandas(sweep, schema=schema)
+    rows = []
+    for f, md in zip(files, read_footers(files)):
+        idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        for col in columns:
+            if col not in idx:
+                rows.append((f, md.num_rows, col, None, None, None, None))
+                continue
+            vmin = vmax = None
+            nulls = 0
+            numeric = None
+            ok = True
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[col]).statistics
+                if st is None or not st.has_min_max:
+                    ok = False
+                    break
+                try:
+                    # pyarrow raises ArrowNotImplementedError for
+                    # physical types it can't cast (e.g.
+                    # FIXED_LEN_BYTE_ARRAY decimals from other writers)
+                    # — degrade to no-stats, which keeps the file
+                    # (conservative), instead of failing the whole read
+                    mn, mx = st.min, st.max
+                except Exception:
+                    ok = False
+                    break
+                # DECIMAL stats come back as decimal.Decimal — they must
+                # be tagged numeric, or the pruner would compare '2.50'
+                # vs '10' as strings and wrongly skip files (lost rows)
+                numeric = isinstance(mn, (int, float, Decimal)) \
+                    and not isinstance(mn, bool)
+                if vmin is None or (mn < vmin):
+                    vmin = mn
+                if vmax is None or (mx > vmax):
+                    vmax = mx
+                nulls += st.null_count or 0
+            # str() round-trips int/float (== repr in py3) and keeps
+            # Decimal exact ('2.50', not "Decimal('2.50')")
+            rows.append((
+                f, md.num_rows, col,
+                None if vmin is None else str(vmin),
+                None if vmax is None else str(vmax),
+                nulls, numeric,
+            ) if ok else (f, md.num_rows, col, None, None, None, None))
+    return spark.createDataFrame(rows, schema)
 
 
 def prune_files_where(manifest: DataFrame,

@@ -2110,8 +2110,8 @@ def q_time_travel(spark, sf_dir):
     Iceberg/Delta membership-list idea): ingest batch 1, commit v1,
     append batch 2, commit v2; reading v1 must see ONLY batch 1 while
     the latest snapshot sees both.  Only file names + a tiny JSON list
-    touch the driver; row counts come from the distributed footer
-    sweep."""
+    touch the driver; row counts come from one pooled driver footer
+    read."""
     import tempfile
 
     from geoparquet_io_spark.operators.maintenance import (commit_snapshot,

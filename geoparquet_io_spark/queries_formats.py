@@ -274,7 +274,7 @@ def q_geojsonl_roundtrip(spark, sf_dir):
 )
 def q_zone_map_prune(spark, sf_dir):
     """Column zone maps, graded: orders range-partitioned by o_orderkey
-    into files -> distributed footer-stats sweep
+    into files -> driver footer-stats read
     (build_column_manifest) -> file-level pruning for o_orderkey >=
     30000 (read_pruned_where) -> exact filter + aggregate.  The oracle
     is the same aggregate over the UNPRUNED table — pruning must be

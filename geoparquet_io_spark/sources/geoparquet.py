@@ -56,8 +56,8 @@ def patch_footer_metadata(path: str, updates: dict) -> int:
     lake, stamping bbox/covering/geo metadata must cost footer IO, not
     a full decompress+re-encode of every file.  ``updates`` values of
     ``None`` DELETE the key.  Returns the appended byte count."""
-    md = pq.ParquetFile(path).metadata
-    schema = pq.read_schema(path)
+    with pq.ParquetFile(path) as pf:
+        md, schema = pf.metadata, pf.schema_arrow
     meta = dict(schema.metadata or {})
     for k, v in updates.items():
         k = k.encode() if isinstance(k, str) else k
@@ -308,8 +308,7 @@ def _cols_with_real_dir_values(path: str, cols: set) -> set:
     Walks directories only; returns as soon as every column is found."""
     found: set = set()
     for _root, dirs, _files in os.walk(path):
-        dirs[:] = [d for d in dirs
-                   if not d.startswith((".", "_"))]
+        dirs[:] = [d for d in dirs if not is_hidden(d)]
         for d in dirs:
             if "=" not in d:
                 continue

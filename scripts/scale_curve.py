@@ -143,7 +143,7 @@ def _grid_spatial_join_query(spark, sf_dir):
 
 # --- r9: write-path + graph queries ------------------------------------------
 # Every prior receipt was a read/compute path; the partitioned GeoParquet
-# write with per-file bbox footer rewrite and the manifest footer sweep
+# write with per-file bbox footer rewrite and the manifest footer read
 # are where a DRIVER-side bottleneck could hide (per-file rename loop,
 # preflight DISTINCT, footer stamping) — r8 verdict #3.  The graph
 # operators are the only iterative-shuffle paths without a point — #4.
@@ -206,8 +206,8 @@ def _write_partitioned_query(spark, sf_dir):
 
 
 def _manifest_sweep_query(spark, sf_dir):
-    """build_manifest over the just-written partitioned dataset — the
-    distributed footer sweep whose file list goes through the driver."""
+    """build_manifest over the just-written partitioned dataset — one
+    pooled driver read of every footer."""
     from geoparquet_io_spark.operators.maintenance import build_manifest
 
     out = _WRITE_OUT.get(sf_dir)

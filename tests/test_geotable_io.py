@@ -115,33 +115,36 @@ def test_empty_partitioned_write_roundtrips_partition_types(points, spark,
     assert back2.df.schema["bucket"].dataType.simpleString() == "int"
 
 
+@pytest.mark.parametrize("col", ["month", "_month"])
 def test_partition_type_restore_never_corrupts_inferred_values(
-        points, spark, tmp_path):
+        points, spark, tmp_path, col):
     """The recorded-type cast applies ONLY in the all-null empty state:
     once real dirs exist whose values Spark parses numerically (e.g.
     month=01 -> int 1), casting back to the recorded 'string' would
     turn '01' into '1' — silent value corruption.  Inference must own
-    the type as soon as any non-null value exists."""
+    the type as soon as any non-null value exists.  A ``_``-prefixed
+    column's ``_month=01`` dirs are data too (Spark's hidden-path rule
+    skips only ``_`` names without ``=``)."""
     import geoparquet_io_spark as gps
     from geoparquet_io_spark.geotable import GeoTable
 
     out = str(tmp_path / "zeropad_part")
     pts = GeoTable(
         points.df.withColumn(
-            "month", F.format_string("%02d", (F.col("event_id") % 3) + 1)),
+            col, F.format_string("%02d", (F.col("event_id") % 3) + 1)),
         points.geo)
-    # empty write records month as string
+    # empty write records the column as string
     GeoTable(pts.df.filter(F.lit(False)), pts.geo).write(
-        out, partition_by=["month"], single_file=False)
+        out, partition_by=[col], single_file=False)
     empty = gps.read_partition(spark, out)
-    assert empty.df.schema["month"].dataType.simpleString() == "string"
+    assert empty.df.schema[col].dataType.simpleString() == "string"
     # real data: dirs month=01/02/03 -> Spark infers int; the recorded
     # 'string' must NOT be re-applied (it cannot recover the zero-pad)
-    pts.write(out, partition_by=["month"], overwrite=False)
+    pts.write(out, partition_by=[col], overwrite=False)
     back = gps.read_partition(spark, out)
     assert back.count() == pts.count()
-    dt = back.df.schema["month"].dataType.simpleString()
-    vals = {r["month"] for r in back.df.select("month").distinct().collect()}
+    dt = back.df.schema[col].dataType.simpleString()
+    vals = {r[col] for r in back.df.select(col).distinct().collect()}
     # either inference's ints stand untouched, or (if Spark kept
     # strings) the original zero-padded values survive — never '1'
     if dt == "string":

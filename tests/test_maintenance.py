@@ -355,6 +355,7 @@ def test_manifest_3d_bbox_reads_xy_planar(spark, tmp_path):
     reading it as 4-element recorded zmin as xmax and pruned files that
     DO intersect the query."""
     import json
+    import math
 
     import pyarrow.parquet as pq
 
@@ -375,6 +376,18 @@ def test_manifest_3d_bbox_reads_xy_planar(spark, tmp_path):
     mf = build_manifest(spark, p)
     row = [r for r in mf.collect() if r["file"] == f][0]
     assert row["xmax"] == x1 and row["ymax"] == y1  # not zmin/ymax-shift
+    kept, skipped = prune_files(mf, (x0, y0, x1, y1))
+    assert f in kept
+    # footer JSON may hold integers: they reach the DoubleType columns
+    # as the same values
+    ints = [math.floor(x0), math.floor(y0), math.ceil(x1), math.ceil(y1)]
+    col["bbox"] = ints
+    patch_footer_metadata(f, {"geo": json.dumps(meta)})
+    mf = build_manifest(spark, p)
+    row = [r for r in mf.collect() if r["file"] == f][0]
+    got = [row[k] for k in ("xmin", "ymin", "xmax", "ymax")]
+    assert got == [float(v) for v in ints]
+    assert all(isinstance(v, float) for v in got)
     kept, skipped = prune_files(mf, (x0, y0, x1, y1))
     assert f in kept
 

@@ -211,6 +211,31 @@ def test_commit_snapshot_reuse_skips_footer_reads(spark, tmp_path):
             assert r == old[r["file"]]
 
 
+def test_commit_snapshot_many_new_files_reads_footers_without_jobs(
+        spark, tmp_path):
+    """70 new members (more than the old 64-file cutover to an executor
+    sweep) are counted from their footers on the driver: right totals,
+    no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "ds")
+    os.makedirs(p)
+    for i in range(70):
+        pq.write_table(pa.table({"id": list(range(i % 5 + 1))}),
+                       os.path.join(p, f"part-{i:03d}.parquet"))
+    sc = spark.sparkContext
+    group = "commit-snapshot-70"
+    sc.setJobGroup(group, "commit_snapshot footer read")
+    try:
+        rec = commit_snapshot(spark, p)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert rec["n_files"] == 70
+    assert rec["n_rows"] == spark.read.parquet(p).count()
+
+
 # --- merge-on-read deletes (equality-delete files) -------------------------
 
 def _fresh_ds(spark, tmp_path, n=100):
