@@ -354,18 +354,29 @@ def _median(xs: list[float]) -> float:
     return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
 
 
-def run_ab(ref_commit: str, rounds: int) -> tuple[dict, dict] | None:
+def run_ab(ref_commit: str, rounds: int,
+           failure: list[str] | None = None) -> tuple[dict, dict] | None:
     """Interleaved A/B: both commits alive as workers, each query timed
     on both sides back-to-back with alternating order, ``rounds``
     passes.  Returns (head_timings, ab_report); None on any setup
-    failure (caller falls back to the in-process path)."""
+    failure (caller falls back to the in-process path), after appending
+    the reason to ``failure``."""
+    def failed(what: str, exc: Exception) -> None:
+        # CalledProcessError's own text is only the exit status; git
+        # says why on stderr ("not a git repository", "invalid reference")
+        detail = (getattr(exc, "stderr", None) or b"").decode(
+            errors="replace").strip() or str(exc)
+        print(f"note: {what} ({detail})", file=sys.stderr)
+        if failure is not None:
+            failure.append(f"{what}: {detail}"[:200])
+
     wt = tempfile.mkdtemp(prefix="bench_ab_ref_")
     try:
         subprocess.run(
             ["git", "worktree", "add", "--detach", wt, ref_commit],
             cwd=_HEAD_DIR, check=True, capture_output=True, timeout=120)
     except Exception as exc:
-        print(f"note: A/B disabled ({exc})", file=sys.stderr)
+        failed("A/B disabled", exc)
         return None
     ref_w = head_w = None
     try:
@@ -488,7 +499,7 @@ def run_ab(ref_commit: str, rounds: int) -> tuple[dict, dict] | None:
             print(f"REF ERROR {name}: {err}", file=sys.stderr)
         return head_t, report
     except Exception as exc:
-        print(f"note: A/B run failed, falling back ({exc})", file=sys.stderr)
+        failed("A/B run failed, falling back", exc)
         return None
     finally:
         for w in (ref_w, head_w):
@@ -558,9 +569,13 @@ def main() -> None:
     if ref_commit:
         rounds = int(os.environ.get("SPARK_GRAFT_BENCH_AB_ROUNDS",
                                     "2" if "--ab" in sys.argv else "1"))
-        got = run_ab(ref_commit, rounds)
+        failure: list[str] = []
+        got = run_ab(ref_commit, rounds, failure)
         if got is not None:
             timings, out["ab"] = got
+        else:
+            # a degraded A/B says so in the result line, not only on stderr
+            out["ab"] = {"ref_commit": ref_commit, "error": "; ".join(failure)}
 
     if timings is None:
         from geoparquet_io_spark.session import get_spark
@@ -628,7 +643,9 @@ def main() -> None:
         "queries": {k: round(v, 2) for k, v in timings.items()},
     }
     ab = out.get("ab")
-    if ab:
+    if ab and "error" in ab:
+        compact["ab"] = ab
+    elif ab:
         ratios = {k: v["ratio"] for k, v in ab.get("queries", {}).items()
                   if v.get("ratio") is not None}
         worst = dict(sorted(ratios.items(), key=lambda kv: -kv[1])[:5])

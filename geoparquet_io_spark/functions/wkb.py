@@ -19,6 +19,8 @@ from typing import Iterable
 
 import numpy as np
 
+from geoparquet_io_spark.meta import VALID_GEOMETRY_TYPES
+
 POINT, LINESTRING, POLYGON = 1, 2, 3
 MULTIPOINT, MULTILINESTRING, MULTIPOLYGON = 4, 5, 6
 GEOMETRYCOLLECTION = 7
@@ -32,6 +34,9 @@ TYPE_NAMES = {
     MULTIPOLYGON: "MULTIPOLYGON",
     GEOMETRYCOLLECTION: "GEOMETRYCOLLECTION",
 }
+#: the GeoParquet ``geometry_types`` spelling of each type code
+GEOPARQUET_NAMES = {c: n for n in VALID_GEOMETRY_TYPES
+                    for c, u in TYPE_NAMES.items() if n.upper() == u}
 
 _PT_LE = struct.Struct("<2d")
 
@@ -132,25 +137,28 @@ def parse(buf: bytes) -> Geom:
     return geom
 
 
-def _parse_at(mv: memoryview, off: int):
-    byte_order = mv[off]
-    fmt = "<" if byte_order == 1 else ">"
+def header_at(mv, off: int = 0) -> tuple[str, int, int]:
+    """The WKB header at ``off``: ``(struct byte-order prefix, base
+    type code, offset of the body)``.  The type is decided by the first
+    5 bytes alone.  Raises ValueError for Z/M coordinates (EWKB or ISO)
+    and for a type outside :data:`TYPE_NAMES`."""
+    fmt = "<" if mv[off] == 1 else ">"
     (gtype,) = struct.unpack_from(fmt + "I", mv, off + 1)
-    # Strip common Z/M/SRID flags (EWKB / ISO): keep base type, 2-D coords only.
+    if gtype & 0xC0000000 or 1000 < gtype < 0x20000000:
+        # EWKB Z (0x80000000) / M (0x40000000) flags, or an ISO Z/M/ZM
+        # code (1001+): coords are 3-/4-wide — reading them as 2-D
+        # would silently interleave garbage
+        raise ValueError("only 2-D WKB supported")
+    # strip the EWKB SRID flag (0x20000000): keep the base type
     base = gtype & 0xFF
     has_srid = bool(gtype & 0x20000000)
-    if gtype & 0xC0000000:
-        # EWKB Z (0x80000000) / M (0x40000000): coords are 3-/4-wide —
-        # reading them as 2-D would silently interleave garbage
-        raise ValueError("only 2-D WKB supported")
-    iso_dims = (gtype % 1000, gtype // 1000)
-    if gtype > 1000 and gtype < 0x20000000:
-        base = iso_dims[0]
-        if iso_dims[1] != 0:
-            raise ValueError("only 2-D WKB supported")
-    off += 5
-    if has_srid:
-        off += 4
+    if base not in TYPE_NAMES:
+        raise ValueError(f"unsupported WKB geometry type {gtype}")
+    return fmt, base, off + (9 if has_srid else 5)
+
+
+def _parse_at(mv: memoryview, off: int):
+    fmt, base, off = header_at(mv, off)
     dt = np.dtype(fmt + "f8")
     if base == POINT:
         arr = np.frombuffer(mv, dtype=dt, count=2, offset=off).reshape(1, 2)
@@ -179,7 +187,6 @@ def _parse_at(mv: memoryview, off: int):
             child, off = _parse_at(mv, off)
             children.append(child)
         return Geom(base, children=children), off
-    raise ValueError(f"unsupported WKB geometry type {gtype}")
 
 
 # ---------------------------------------------------------------------------

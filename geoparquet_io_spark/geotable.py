@@ -13,11 +13,9 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from geoparquet_io_spark.meta import GeoMeta, GeoColumnMeta
 from geoparquet_io_spark.functions import crs as _crs
-from geoparquet_io_spark.functions import geom as G
 
 
 #: sentinel for GeoTable(bbox_column=...): "no covering, and do NOT fall
@@ -33,13 +31,7 @@ class GeoTable:
         self._df = df
         self._geo = geo
         if bbox_column is None and geo is not None:
-            cov = geo.primary.covering or {}
-            b = cov.get("bbox") if isinstance(cov, dict) else None
-            xmin = b.get("xmin") if isinstance(b, dict) else None
-            # untrusted footers: malformed covering degrades to "no
-            # covering" like every other missing-covering case
-            if isinstance(xmin, (list, tuple)) and xmin:
-                bbox_column = xmin[0]
+            bbox_column = geo.primary.covering_column
         if bbox_column is None and "bbox" in df.columns:
             bbox_column = "bbox"
         # NO_BBOX ("") suppresses both fallbacks: reproject clears the
@@ -324,77 +316,20 @@ class GeoTable:
 
     # -- write (SURVEY 2.2, 2.10) -----------------------------------------------------
 
-    def _write_geo(self, update_metadata: bool) -> GeoMeta | None:
-        """Fill in missing geometry_types / bbox before writing
-        (reference: write_strategies/duckdb_kv.py:386-431)."""
-        geo = self._geo
-        g = self.geometry_column
-        if not update_metadata or geo is None or g is None:
-            return geo
-        need_types = not geo.primary.geometry_types
-        need_bbox = geo.primary.bbox is None and self._bbox_column is not None
-        if not (need_types or need_bbox):
-            return geo
-        geo = geo.copy()
-        # both stats ride ONE aggregate job (they used to be two scans of
-        # the full upstream pipeline — measured 0.2s each on the bench
-        # pipeline); collect_set over one derived column is a cheap
-        # map-side-combined aggregate, and the spec requires the FULL
-        # column (a type occurring only outside a sample would make the
-        # footer lie), so a sample is not an option
-        aggs = []
-        if need_types:
-            aggs.append(F.collect_set(
-                G.st_geometrytype(F.col(g))).alias("__types"))
-        if need_bbox:
-            b = F.col(self._bbox_column)
-            aggs += [F.min(b["xmin"]).alias("__xmin"),
-                     F.min(b["ymin"]).alias("__ymin"),
-                     F.max(b["xmax"]).alias("__xmax"),
-                     F.max(b["ymax"]).alias("__ymax")]
-        try:
-            row = self._df.agg(*aggs).collect()[0]
-        except Exception as ex:  # noqa: BLE001 — narrow re-raise below
-            if need_types and "only 2-D WKB" in str(ex):
-                # a passthrough copy of a file with Z/EWKB geometry must
-                # not die computing optional footer stats: leave
-                # geometry_types empty (spec-legal "unknown") and retry
-                # the bbox-only aggregate if one was requested
-                import warnings
-
-                warnings.warn(
-                    "geometry_types left empty: column contains 3-D/EWKB "
-                    "geometry this engine cannot type (only 2-D WKB)")
-                need_types = False
-                if not need_bbox:
-                    return geo
-                row = self._df.agg(*aggs[1:]).collect()[0]
-            else:
-                raise
-        if need_types:
-            mapped = {
-                "POINT": "Point", "LINESTRING": "LineString", "POLYGON": "Polygon",
-                "MULTIPOINT": "MultiPoint", "MULTILINESTRING": "MultiLineString",
-                "MULTIPOLYGON": "MultiPolygon",
-                "GEOMETRYCOLLECTION": "GeometryCollection",
-            }
-            geo.ensure_primary().geometry_types = sorted(
-                {mapped.get(t, t) for t in row["__types"] if t}
-            )
-        if need_bbox:
-            bbox = [row["__xmin"], row["__ymin"],
-                    row["__xmax"], row["__ymax"]]
-            # empty input (or all-null bbox column): no extent exists —
-            # leave bbox absent rather than crash serializing Nones
-            geo.ensure_primary().bbox = None if any(v is None for v in bbox) else bbox
-        return geo
-
     def write(self, path: str, partition_by=None, update_metadata: bool = True,
               **kw) -> list[str]:
+        """Write through :func:`sources.geoparquet.write`; starts no
+        Spark job besides the write's own.  Each file's footer describes
+        the rows written to it: its ``geometry_types`` and, from this
+        table's bbox column (``per_file_bbox`` by default), its bbox —
+        not the input's.  ``update_metadata=False`` stamps ``geo``
+        exactly as it is."""
         from geoparquet_io_spark.sources.geoparquet import write
 
-        return write(self._df, path, self._write_geo(update_metadata),
-                     partition_by=partition_by, **kw)
+        if update_metadata and self._geo is not None and self._bbox_column:
+            kw.setdefault("per_file_bbox", self._bbox_column)
+        return write(self._df, path, self._geo, partition_by=partition_by,
+                     update_metadata=update_metadata, **kw)
 
     def to_file(self, path: str, **kw):
         """Write to ANY supported container by extension — GeoPackage /

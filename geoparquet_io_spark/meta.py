@@ -84,6 +84,15 @@ class GeoColumnMeta:
     orientation: str | None = None
     epoch: float | None = None
 
+    @property
+    def covering_column(self) -> str | None:
+        """The column ``covering.bbox`` names; None when the covering is
+        absent or malformed (untrusted footers degrade to "no
+        covering")."""
+        b = self.covering.get("bbox") if isinstance(self.covering, dict) else None
+        xmin = b.get("xmin") if isinstance(b, dict) else None
+        return xmin[0] if isinstance(xmin, (list, tuple)) and xmin else None
+
     def to_dict(self) -> dict:
         d: dict[str, Any] = {"encoding": self.encoding, "geometry_types": list(self.geometry_types)}
         if self.crs is not None:

@@ -231,11 +231,9 @@ def _check_per_file_bboxes(files: list[str], footers: list,
     the first file misses corrupt partitions).  Uses the covering column's
     row-group statistics — footer-only, no data read."""
     errors: list[str] = []
-    cov = geo.primary.covering or {}
-    paths = cov.get("bbox") if isinstance(cov, dict) else None
-    if not paths:
+    cov_col = geo.primary.covering_column
+    if cov_col is None:
         return errors
-    cov_col = paths["xmin"][0]
     for f, md in zip(files, footers):
         g = GeoMeta.from_footer(md.metadata)
         if g is None or g.primary.bbox is None:
@@ -342,11 +340,9 @@ def validate(spark, path: str, sample_rows: int = 10_000) -> list[str]:
     # data-vs-metadata on the sample: types match, bbox contains data
     declared = set(geo.primary.geometry_types)
     if declared:
-        mapped = {
-            "POINT": "Point", "LINESTRING": "LineString", "POLYGON": "Polygon",
-            "MULTIPOINT": "MultiPoint", "MULTILINESTRING": "MultiLineString",
-            "MULTIPOLYGON": "MultiPolygon", "GEOMETRYCOLLECTION": "GeometryCollection",
-        }
+        from geoparquet_io_spark.functions import wkb as _wkb
+
+        mapped = {_wkb.TYPE_NAMES[c]: n for c, n in _wkb.GEOPARQUET_NAMES.items()}
         # the sample reports the BASE type; the spec allows declared
         # entries with dimension suffixes ("Polygon Z") — compare bases so
         # a compliant 3D file is not flagged

@@ -7,10 +7,12 @@ single-file reference never faced:
   (sources/geoparquet.py:read_footers) producing a tiny (file, rows,
   bytes, bbox) table.  A spatial query then prunes at
   FILE granularity before Spark ever lists row groups — the Iceberg/
-  Delta zone-map idea expressed over plain GeoParquet footers (this
-  repo's writers already stamp a per-file bbox,
-  sources/geoparquet.py:write per_file_bbox; reference invariant
-  core/partition_common.py:657-705).
+  Delta zone-map idea expressed over plain GeoParquet footers.  This
+  repo's writer stamps every file's footer with the bbox of the rows
+  written to it (sources/geoparquet.py:write, from the covering column;
+  reference invariant core/partition_common.py:657-705), so a file's
+  manifest row bounds exactly that file.  The manifest is built on the
+  driver as a local relation: pruning with it starts no Spark job.
 - **Compaction**: bin small files up to a target size in one
   repartition + rewrite, preserving footer geo metadata.  Small-file
   proliferation is the classic lake failure mode (every file = one
@@ -42,6 +44,18 @@ MANIFEST_SCHEMA = T.StructType([
 ])
 
 
+def _local_frame(spark: SparkSession, rows: list[tuple],
+                 schema: T.StructType) -> DataFrame:
+    """``rows`` as a DataFrame built from an Arrow table, which Spark
+    plans as a LocalRelation: actions on it start no Spark job, where a
+    ``createDataFrame(rows, schema)`` RDD scan starts one per action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema)))
+
+
 def build_manifest(spark: SparkSession, path: str,
                    files: list[str] | None = None) -> DataFrame:
     """Footer read -> manifest DataFrame (one row per file).
@@ -67,7 +81,7 @@ def build_manifest(spark: SparkSession, path: str,
         st = os.stat(f)
         rows.append((f, md.num_rows, st.st_size, st.st_mtime_ns,
                      xmin, ymin, xmax, ymax))
-    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    return _local_frame(spark, rows, MANIFEST_SCHEMA)
 
 
 def prune_files(manifest: DataFrame,
@@ -850,7 +864,7 @@ def build_column_manifest(spark: SparkSession, path: str,
                 None if vmax is None else str(vmax),
                 nulls, numeric,
             ) if ok else (f, md.num_rows, col, None, None, None, None))
-    return spark.createDataFrame(rows, schema)
+    return _local_frame(spark, rows, schema)
 
 
 def prune_files_where(manifest: DataFrame,

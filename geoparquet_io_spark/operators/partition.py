@@ -39,10 +39,6 @@ def _checked_write(gt, key_column, path: str, skip_analysis: bool,
                 + "; ".join(analysis.errors)
                 + " (pass force=True or skip_analysis=True)"
             )
-    # per-partition-file bbox metadata is the reference invariant
-    # (core/partition_common.py:657-705)
-    if gt.bbox_column and "per_file_bbox" not in kw:
-        kw["per_file_bbox"] = gt.bbox_column
     return gt.write(path, partition_by=keys, **kw)
 
 

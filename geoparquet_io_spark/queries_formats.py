@@ -324,7 +324,7 @@ def q_bounds_metadata_only(spark, sf_dir):
     if "bbox" not in gt.df.columns:
         gt = gt.add_bbox()
     out = os.path.join(tempfile.mkdtemp(prefix="bmeta_"), "ds")
-    gt.write(out, per_file_bbox="bbox")
+    gt.write(out)
     env = bounds_from_metadata(spark, out)
     if env is None:
         raise AssertionError("metadata bounds unavailable after "

@@ -13,6 +13,7 @@ from __future__ import annotations
 import glob as _glob
 import json
 import os
+import struct
 import uuid
 from typing import Iterator
 
@@ -25,6 +26,7 @@ from geoparquet_io_spark.meta import (
     GEOPARQUET_VERSIONS,
     GeoColumnMeta,
     GeoMeta,
+    bbox_union,
 )
 
 # Reference best-practice write defaults (core/common.py:70-110):
@@ -123,32 +125,36 @@ _MAX_UNION_FILES = 1024
 def footer_geo(n_files: int, footers) -> GeoMeta | None:
     """Dataset-level geo from an iterator over the ``FileMetaData`` of
     ``n_files`` files in sorted order: the first footer's geo with its
-    primary bbox UNIONED over every file (after a ``per_file_bbox``
-    write each footer carries only its own file's bbox).  Past
-    ``_MAX_UNION_FILES`` the bbox is CLEARED instead of swept: at a
-    100 TB dataset's file count a driver sweep is minutes of startup
-    latency, and an absent bbox is honest where an understated one
-    (first file only) would be wrong.  Pulls a second footer from
-    ``footers`` only when a union is needed."""
-    from geoparquet_io_spark.meta import bbox_union
-
+    primary bbox and ``geometry_types`` UNIONED over every file (each
+    footer describes only its own file's rows).  An empty types list
+    means "unknown", so one such file empties the union.  Past
+    ``_MAX_UNION_FILES`` both are CLEARED instead of swept: at a 100 TB
+    dataset's file count a driver sweep is minutes of startup latency,
+    and an absent stat is honest where a first-file one would understate
+    the dataset.  Pulls a second footer from ``footers`` only when a
+    union is needed."""
     geo = GeoMeta.from_footer(next(footers).metadata)
+    if geo is None or n_files == 1:
+        return geo
     # (GeoMeta.primary never returns None — a missing entry yields a
-    # detached default whose bbox is None)
-    if geo is None or n_files == 1 or geo.primary.bbox is None:
+    # detached default with neither stat, returned here untouched)
+    p = geo.primary
+    bbox, types = p.bbox, set(p.geometry_types)
+    if bbox is None and not types:
         return geo
     if n_files > _MAX_UNION_FILES:
-        geo.ensure_primary().bbox = None
+        p.bbox, p.geometry_types = None, []
         return geo
-    union = geo.primary.bbox
     for md in footers:
         g = GeoMeta.from_footer(md.metadata)
+        q = g.primary if g is not None else GeoColumnMeta()
         # spec-aware union: 3D+3D keeps Z, mixed projects to 2D — the
         # positional 4-tuple union read a 3D file's zmin as xmax
-        union = bbox_union(union, g.primary.bbox if g is not None else None)
-        if union is None:
+        bbox = bbox_union(bbox, q.bbox)
+        types = types | set(q.geometry_types) if types and q.geometry_types else set()
+        if bbox is None and not types:
             break
-    geo.ensure_primary().bbox = union
+    p.bbox, p.geometry_types = bbox, sorted(types)
     return geo
 
 
@@ -424,9 +430,25 @@ def write(
     per_file_bbox: str | None = None,
     target_row_group_mb: float | None = None,
     version: str | None = None,
+    update_metadata: bool = True,
 ) -> list[str]:
     """Write GeoParquet with footer ``geo`` metadata.  Returns written files.
 
+    Each file's footer describes the rows written TO THAT FILE, not the
+    input: the writer computes the primary column's ``geometry_types``
+    (from the WKB headers) and its ``bbox`` (from the ``per_file_bbox``
+    covering) while it writes, and replaces whatever ``geo`` carried.
+    Without a covering column the bbox passes through from ``geo``.  A
+    file holding 3-D/EWKB-Z geometry gets empty (unknown) types, with
+    one warning per write.  A dataset reader unions both stats over the
+    files (:func:`footer_geo`).
+
+    - ``per_file_bbox``: the bbox covering column; defaults to the
+      column ``geo``'s covering declares, when the frame has it (the
+      reference invariant for partitioned outputs,
+      core/partition_common.py:657-705).
+    - ``update_metadata=False``: stamp ``geo`` exactly as given, no
+      stats; passing ``per_file_bbox`` with it raises.
     - ``version``: override the footer spec version ("1.0"/"1.1"/"2.0"/
       "parquet-geo-only"; default keeps ``geo.version``).  For "2.0" the
       file carries the GeoArrow extension mapping (always emitted) plus a
@@ -441,10 +463,8 @@ def write(
       its arrow_streaming strategy, write_strategies/arrow_streaming.py:81-341).
     - directory mode (default)   -> one file per task via executor-side
       pyarrow writers; with ``partition_by`` -> hive ``col=value/`` dirs.
-    - ``per_file_bbox=<bbox column>`` -> each file's footer ``geo`` metadata
-      carries THAT file's bbox (the reference invariant for partitioned
-      outputs, core/partition_common.py:657-705).  Costs one executor-local
-      rewrite per file (the reference's disk-rewrite strategy).
+      ``overwrite`` removes the old files only once the new ones are
+      staged: a write that fails leaves the old dataset readable.
     """
     if version is not None:
         import copy as _copy
@@ -478,8 +498,7 @@ def write(
         # silently ignoring these wrote one unpartitioned file while the
         # caller believed the data was hive-partitioned / bounded / kept
         bad = [n for n, v in [("partition_by", partition_by),
-                              ("max_rows_per_file", max_rows_per_file),
-                              ("per_file_bbox", per_file_bbox)]
+                              ("max_rows_per_file", max_rows_per_file)]
                if v is not None]
         if bad:
             raise ValueError(
@@ -489,6 +508,36 @@ def write(
             raise FileExistsError(
                 f"{path!r} exists and overwrite=False (single-file mode "
                 "has no append)")
+    if not update_metadata and per_file_bbox is not None:
+        raise ValueError(
+            "per_file_bbox stamps footer stats, which update_metadata=False "
+            "turns off; pass one or the other")
+    if update_metadata and geo is not None and per_file_bbox is None \
+            and geo.primary.covering_column in df.columns:
+        per_file_bbox = geo.primary.covering_column
+    if per_file_bbox is not None:
+        # the covering's struct shape is checked here, on the driver, not
+        # as a failed task of the write
+        from pyspark.sql import types as T
+
+        if per_file_bbox not in df.columns:
+            raise ValueError(f"per_file_bbox column {per_file_bbox!r} not in schema")
+        dt = df.schema[per_file_bbox].dataType
+        missing = {"xmin", "ymin", "xmax", "ymax"} - set(
+            dt.names if isinstance(dt, T.StructType) else ())
+        if missing:
+            raise ValueError(
+                f"per_file_bbox column {per_file_bbox!r} must be a "
+                f"struct with xmin/ymin/xmax/ymax fields; missing "
+                f"{sorted(missing)} (got {dt.simpleString()})")
+    schema = _arrow_schema_with_geo(df, geo)
+    # the footer stats each file gets: (WKB column to type, covering
+    # column to bound); (None, None) stamps the footer as given
+    stats = (None, None)
+    if update_metadata and b"geo" in (schema.metadata or {}):
+        g = geo.primary_column
+        typed = g in schema.names and pa.types.is_binary(schema.field(g).type)
+        stats = (g if typed else None, per_file_bbox)
 
     if target_row_group_mb is not None:
         # size groups to the reference's 64-256 MB guidance from a bounded
@@ -502,15 +551,75 @@ def write(
             compression_level=compression_level)
 
     if single_file:
-        return _write_single_file(df, path, geo, compression, compression_level, row_group_rows)
+        return _write_single_file(df, path, schema, compression, compression_level,
+                                  row_group_rows, stats)
     return _write_distributed(
-        df, path, geo, partition_by, compression, compression_level, row_group_rows,
-        max_rows_per_file, overwrite, per_file_bbox,
+        df, path, schema, partition_by, compression, compression_level, row_group_rows,
+        max_rows_per_file, overwrite, stats,
     )
 
 
-def _write_single_file(df, path, geo, compression, compression_level, row_group_rows):
-    schema = _arrow_schema_with_geo(df, geo)
+class _FileStats:
+    """Footer stats of the rows one file receives: the GeoParquet types
+    of the WKB values in ``gcol`` and the bbox of the ``bbox_col``
+    covering (a None column is not computed).  ``types`` turns None once
+    a value's header is not 2-D WKB this engine can type; ``bbox`` stays
+    None while no row has a bbox."""
+
+    def __init__(self, gcol: str | None, bbox_col: str | None):
+        self.gcol, self.bbox_col = gcol, bbox_col
+        self.types: set[str] | None = set()
+        self.bbox: list | None = None
+
+    def add(self, tbl: "pa.Table") -> None:
+        import pyarrow.compute as pc
+
+        if self.gcol is not None and self.types is not None:
+            from geoparquet_io_spark.functions import wkb as _wkb
+
+            # one decode per DISTINCT 5-byte header, not a parse per row
+            heads = pc.unique(pc.binary_slice(tbl.column(self.gcol), 0, 5))
+            try:
+                self.types |= {_wkb.GEOPARQUET_NAMES[_wkb.header_at(h)[1]]
+                               for h in heads.to_pylist() if h is not None}
+            except (ValueError, IndexError, struct.error):
+                self.types = None
+        if self.bbox_col is not None:
+            col = tbl.column(self.bbox_col).combine_chunks()
+            # flatten(), NOT .field(): .field() ignores struct-level
+            # nulls and reads the (undefined, typically 0.0) child values
+            # under them — a null bbox row would wrongly extend the
+            # footer bbox to 0.  flatten() propagates parent nulls;
+            # pc.min/max then skip them.
+            kids = dict(zip((f.name for f in col.type), col.flatten()))
+            box = [pc.min(kids["xmin"]).as_py(), pc.min(kids["ymin"]).as_py(),
+                   pc.max(kids["xmax"]).as_py(), pc.max(kids["ymax"]).as_py()]
+            if None not in box:      # None: every row here has a null bbox
+                self.bbox = bbox_union(self.bbox, box) if self.bbox else box
+
+    def stamp(self, schema: pa.Schema) -> pa.Schema:
+        """``schema`` whose ``geo`` footer carries these stats."""
+        if self.gcol is None and self.bbox_col is None:
+            return schema
+        g = GeoMeta.from_json(schema.metadata[b"geo"])
+        p = g.ensure_primary()
+        if self.gcol is not None:
+            p.geometry_types = sorted(self.types or ())
+        if self.bbox_col is not None:
+            p.bbox = self.bbox
+        return schema.with_metadata({**schema.metadata, b"geo": g.to_json().encode()})
+
+
+def _warn_untyped() -> None:
+    import warnings
+
+    warnings.warn(
+        "geometry_types left empty: column contains 3-D/EWKB or non-WKB "
+        "geometry this engine cannot type (only 2-D WKB)")
+
+
+def _write_single_file(df, path, schema, compression, compression_level,
+                       row_group_rows, stats):
     os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
     # write to a dot-temp and publish with one rename: opening the
     # ParquetWriter directly on the destination TRUNCATED any existing
@@ -521,22 +630,21 @@ def _write_single_file(df, path, geo, compression, compression_level, row_group_
         os.path.dirname(os.path.abspath(path)),
         f".inprogress-{uuid.uuid4().hex[:12]}-"
         f"{os.path.basename(path)}")
-    writer = pq.ParquetWriter(
-        tmp, schema, compression=compression, compression_level=compression_level
-    )
+    # toArrow() materializes; for the huge case use directory mode.
+    tbl = df.toArrow()
+    st = _FileStats(*stats)
+    st.add(tbl)
+    schema = st.stamp(schema)
     try:
-        # toArrow() materializes; for the huge case use directory mode.
-        tbl = df.toArrow().cast(schema)
-        if tbl.num_rows == 0:
-            writer.write_table(tbl)
-        for batch_start in range(0, tbl.num_rows, row_group_rows):
-            writer.write_table(tbl.slice(batch_start, row_group_rows))
-        writer.close()
+        with pq.ParquetWriter(tmp, schema, compression=compression,
+                              compression_level=compression_level) as writer:
+            writer.write_table(tbl.cast(schema), row_group_size=row_group_rows)
         os.replace(tmp, path)
     finally:
-        writer.close()   # idempotent; closes on the failure path
         if os.path.exists(tmp):
             os.unlink(tmp)
+    if st.types is None:
+        _warn_untyped()
     return [path]
 
 
@@ -560,30 +668,38 @@ INPROGRESS_ORPHAN_AGE_SEC = int(os.environ.get(
     "SPARK_GRAFT_INPROGRESS_ORPHAN_AGE", 7 * 24 * 3600))
 
 
-def _write_distributed(
-    df, path, geo, partition_by, compression, compression_level, row_group_rows,
-    max_rows_per_file, overwrite, per_file_bbox=None,
-):
-    if per_file_bbox is not None:
-        if per_file_bbox not in df.columns:
-            raise ValueError(
-                f"per_file_bbox column {per_file_bbox!r} not in schema")
-        # the struct SHAPE must be validated too: get_field_index
-        # returns -1 for a missing name and flatten()[-1] would then
-        # silently read the LAST child for every min/max — stamping
-        # wrong footer bboxes that mis-prune file skipping forever
-        from pyspark.sql import types as T
+def _sweep(path: str, doomed, prune_dirs: bool = False) -> None:
+    """Unlink every file below ``path`` whose full name ``doomed``
+    accepts; with ``prune_dirs``, also remove the directories that are
+    left empty."""
+    for root, _dirs, names in os.walk(path, topdown=False):
+        for n in names:
+            full = os.path.join(root, n)
+            try:
+                if doomed(full):
+                    os.unlink(full)
+            except FileNotFoundError:
+                pass     # racing with its own writer/committer
+        if prune_dirs and root != path and not os.listdir(root):
+            os.rmdir(root)
 
-        dt = df.schema[per_file_bbox].dataType
-        names = set(dt.names) if isinstance(dt, T.StructType) else set()
-        missing = {"xmin", "ymin", "xmax", "ymax"} - names
-        if missing:
-            raise ValueError(
-                f"per_file_bbox column {per_file_bbox!r} must be a "
-                f"struct with xmin/ymin/xmax/ymax fields; missing "
-                f"{sorted(missing)} (got {dt.simpleString()})")
-    geo_json = geo.to_json() if geo is not None else None
-    schema = _arrow_schema_with_geo(df, geo)
+
+class _OpenFile:
+    """One output file of a write task: rows not yet encoded (at most a
+    row group plus a batch), its writer once a row group is flushed, and
+    the stats of every row it received."""
+
+    def __init__(self, path: str, stats: tuple):
+        self.path, self.rows, self.flushed = path, 0, 0
+        self.pending: list = []
+        self.writer = None
+        self.stats = _FileStats(*stats)
+
+
+def _write_distributed(
+    df, path, schema, partition_by, compression, compression_level, row_group_rows,
+    max_rows_per_file, overwrite, stats,
+):
     schema_ser = schema.serialize().to_pybytes()
     # per-job id scopes the in-flight prefix AND the orphan sweep: two
     # concurrent appends to the same directory (a designed scenario —
@@ -591,10 +707,6 @@ def _write_distributed(
     # each other's in-flight task files
     job_id = uuid.uuid4().hex[:12]
     inprog_prefix = f".inprogress-{job_id}-"
-    if overwrite and os.path.isdir(path):
-        import shutil
-
-        shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
     part_cols = list(partition_by or [])
     if part_cols:
@@ -606,18 +718,6 @@ def _write_distributed(
         [schema.field(n) for n in data_cols], metadata=schema.metadata
     )
 
-    # per-file-bbox files buffer batches in memory up to this many rows so
-    # the footer can be stamped with the EXACT bbox in a single parquet
-    # encode (no read-modify-rewrite).  Memory is comparable to what the
-    # parquet writer's own row-group buffer would hold; files that outgrow
-    # the cap fall back to streaming + one footer rewrite.  (pyarrow >= 18
-    # makes the fallback unnecessary via ParquetWriter.add_key_value_metadata
-    # — stamp at close; not available on this pyarrow.)
-    # the cap must not scale with max_rows_per_file: a 50M-row file limit
-    # would otherwise disable spilling entirely and buffer whole files
-    buffer_cap = (4 * row_group_rows if max_rows_per_file is None
-                  else min(max_rows_per_file, 4 * row_group_rows))
-
     def write_partition(batches: Iterator["pa.RecordBatch"]):
         from pyspark import TaskContext
 
@@ -626,13 +726,10 @@ def _write_distributed(
         dschema = pa.schema(
             [full_schema.field(n) for n in data_cols], metadata=full_schema.metadata
         )
-        buffered = per_file_bbox is not None and geo_json is not None
-        # key -> state; streaming: [writer, file, rows]
-        #              buffered:  [None, file, rows, parts(list of tables), bbox]
-        open_w: dict[tuple, list] = {}
-        emitted: list[tuple[str, int]] = []
+        open_f: dict[tuple, _OpenFile] = {}
+        emitted: list[dict] = []
 
-        def _new_file(k: tuple) -> str:
+        def _new_file(k: tuple) -> _OpenFile:
             d = path
             if part_cols:
                 d = os.path.join(
@@ -644,129 +741,68 @@ def _write_distributed(
             # failed or speculative task attempt can never leak a partial
             # or duplicate file into reads — the driver renames the
             # manifest's survivors to their visible names after collect()
-            return os.path.join(
-                d, f"{inprog_prefix}part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet")
+            return _OpenFile(os.path.join(
+                d, f"{inprog_prefix}part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet"),
+                stats)
 
-        def _open(k: tuple):
-            f = _new_file(k)
-            if buffered:
-                open_w[k] = [None, f, 0, [], None]
-            else:
-                w = pq.ParquetWriter(
-                    f, dschema, compression=compression,
-                    compression_level=compression_level,
-                )
-                open_w[k] = [w, f, 0]
-            return open_w[k]
+        def _writer(f: _OpenFile, fschema: pa.Schema):
+            f.writer = pq.ParquetWriter(
+                f.path, fschema, compression=compression,
+                compression_level=compression_level)
 
-        def _bbox_of(sub: "pa.Table"):
-            import pyarrow.compute as pc
+        def _add(f: _OpenFile, chunk: "pa.Table"):
+            if f.rows - f.flushed >= row_group_rows:
+                # flush the full row groups only now that more rows have
+                # come: a file that ends on a group boundary still gets
+                # the single encode in _close
+                raw = pa.concat_tables(f.pending)
+                n = raw.num_rows - raw.num_rows % row_group_rows
+                if f.writer is None:
+                    _writer(f, dschema)
+                f.writer.write_table(raw.slice(0, n).cast(dschema),
+                                     row_group_size=row_group_rows)
+                f.pending, f.flushed = [raw.slice(n)], f.flushed + n
+            f.stats.add(chunk)
+            f.pending.append(chunk)
+            f.rows += chunk.num_rows
 
-            col = sub.column(per_file_bbox).combine_chunks()
-            # flatten(), NOT .field(): .field() ignores struct-level
-            # nulls and reads the (undefined, typically 0.0) child
-            # values under them — a null bbox row would wrongly extend
-            # the footer bbox to 0.  flatten() propagates parent nulls;
-            # pc.min/max then skip them.
-            xmin, ymin, xmax, ymax = (
-                col.flatten()[col.type.get_field_index(n)]
-                for n in ("xmin", "ymin", "xmax", "ymax"))
-            return [
-                pc.min(xmin).as_py(), pc.min(ymin).as_py(),
-                pc.max(xmax).as_py(), pc.max(ymax).as_py(),
-            ]
-
-        def _track_bbox(slot: list, sub: "pa.Table"):
-            vals = _bbox_of(sub)
-            if any(v is None for v in vals):
-                # all rows in this chunk had null bboxes: no contribution
-                # (an all-null file leaves the footer bbox absent)
-                return
-            cur = slot[4]
-            slot[4] = vals if cur is None else [
-                min(cur[0], vals[0]), min(cur[1], vals[1]),
-                max(cur[2], vals[2]), max(cur[3], vals[3]),
-            ]
-
-        def _geo_with_bbox(bbox) -> bytes:
-            from geoparquet_io_spark.meta import GeoMeta as _GM
-
-            g = _GM.from_json(geo_json)
-            if bbox is not None:
-                g.ensure_primary().bbox = [float(v) for v in bbox]
-            return g.to_json().encode()
-
-        def _spill_to_writer(slot: list):
-            """Buffered file outgrew the cap: switch to a streaming writer
-            (dataset-level geo in the schema); footer gets a single rewrite
-            at close to stamp the exact bbox."""
-            w = pq.ParquetWriter(
-                slot[1], dschema, compression=compression,
-                compression_level=compression_level,
-            )
-            for part in slot[3]:
-                w.write_table(part)
-            slot[0], slot[3] = w, []
-
-        def _close_slot(slot: list):
-            if not buffered:
-                slot[0].close()
-                return
-            if slot[0] is not None:  # spilled: streaming writer + footer patch
-                slot[0].close()
-                # O(footer) metadata patch — the spilled pages are never
-                # decompressed or re-encoded just to stamp the file bbox
-                patch_footer_metadata(slot[1],
-                                      {b"geo": _geo_with_bbox(slot[4])})
-                return
-            # common case: whole file buffered -> ONE encode, exact footer
-            fschema = dschema.with_metadata(
-                {**(dschema.metadata or {}), b"geo": _geo_with_bbox(slot[4])}
-            )
-            w = pq.ParquetWriter(
-                slot[1], fschema, compression=compression,
-                compression_level=compression_level,
-            )
+        def _close(f: _OpenFile):
+            fschema = f.stats.stamp(dschema)
+            if f.writer is None:
+                # the common case: the whole file in one encode, footer exact
+                _writer(f, fschema)
             try:
-                tbl = pa.concat_tables(slot[3]).cast(fschema) if slot[3] else \
-                    pa.Table.from_batches([], schema=fschema)
-                if tbl.num_rows == 0:
-                    w.write_table(tbl)
-                for start in range(0, tbl.num_rows, row_group_rows):
-                    w.write_table(tbl.slice(start, row_group_rows))
+                f.writer.write_table(pa.concat_tables(f.pending).cast(dschema),
+                                     row_group_size=row_group_rows)
             finally:
-                w.close()
+                f.writer.close()
+            if f.flushed and fschema is not dschema:
+                # O(footer) metadata patch — the flushed pages are never
+                # decompressed or re-encoded just to stamp the file's stats
+                patch_footer_metadata(f.path, {b"geo": fschema.metadata[b"geo"]})
+            emitted.append({"file": f.path, "rows": f.rows,
+                            "untyped": f.stats.types is None})
 
         def _append(k: tuple, sub: "pa.Table"):
-            sub = sub.cast(dschema)
             while sub.num_rows:
-                slot = open_w.get(k) or _open(k)
+                f = open_f.get(k) or open_f.setdefault(k, _new_file(k))
                 take = sub.num_rows
                 if max_rows_per_file:
-                    take = min(take, max_rows_per_file - slot[2])
-                chunk = sub.slice(0, take)
-                if buffered:
-                    _track_bbox(slot, chunk)
-                    if slot[0] is not None:
-                        slot[0].write_table(chunk)
-                    else:
-                        slot[3].append(chunk)
-                        if slot[2] + take > buffer_cap:
-                            _spill_to_writer(slot)
-                else:
-                    slot[0].write_table(chunk)
-                slot[2] += take
+                    take = min(take, max_rows_per_file - f.rows)
+                _add(f, sub.slice(0, take))
                 sub = sub.slice(take)
-                if max_rows_per_file and slot[2] >= max_rows_per_file:
-                    _close_slot(slot)
-                    emitted.append((slot[1], slot[2]))
-                    del open_w[k]
+                if max_rows_per_file and f.rows >= max_rows_per_file:
+                    _close(open_f.pop(k))
 
         try:
             for batch in batches:
-                tbl = pa.Table.from_batches([batch]).cast(full_schema)
+                # rows stay in Spark's arrow types until encode, where
+                # they are cast to the file schema once per row group
+                tbl = pa.Table.from_batches([batch])
                 if part_cols:
-                    keys = list(zip(*[tbl.column(c).to_pylist() for c in part_cols]))
+                    keys = list(zip(*[
+                        tbl.column(c).cast(full_schema.field(c).type).to_pylist()
+                        for c in part_cols]))
                     by_key: dict[tuple, list[int]] = {}
                     for i, k in enumerate(keys):
                         by_key.setdefault(k, []).append(i)
@@ -775,23 +811,24 @@ def _write_distributed(
                 else:
                     _append((), tbl.select(data_cols))
         finally:
-            for slot in open_w.values():
-                _close_slot(slot)
-                emitted.append((slot[1], slot[2]))
-        out = pa.table(
-            {
-                "file": [f for f, _ in emitted],
-                "rows": [n for _, n in emitted],
-            },
-            schema=pa.schema([("file", pa.string()), ("rows", pa.int64())]),
-        )
-        yield from out.to_batches()
+            for f in open_f.values():
+                _close(f)
+        yield from pa.Table.from_pylist(emitted, schema=pa.schema([
+            ("file", pa.string()), ("rows", pa.int64()), ("untyped", pa.bool_())]),
+        ).to_batches()
 
-    result_schema = "file string, rows long"
-    res = df.mapInArrow(write_partition, schema=result_schema) if hasattr(df, "mapInArrow") else None
-    if res is None:  # pragma: no cover - old spark fallback
-        raise RuntimeError("requires Spark >= 3.3 (mapInArrow)")
-    rows = res.collect()
+    res = df.mapInArrow(write_partition,
+                        schema="file string, rows long, untyped boolean")
+    try:
+        rows = res.collect()
+    except BaseException:
+        _sweep(path, lambda full: os.path.basename(full).startswith(inprog_prefix))
+        raise
+    if overwrite:
+        # the old dataset goes only now that the new one is staged: a
+        # write that fails above leaves it readable
+        _sweep(path, lambda full: not os.path.basename(full).startswith(inprog_prefix),
+               prune_dirs=True)
     # task commit: collect() holds exactly one result per partition (the
     # winning attempt), so renaming only the manifest's files and sweeping
     # the rest makes failed/speculative attempts invisible to readers
@@ -805,26 +842,22 @@ def _write_distributed(
     import time as _time
 
     now = _time.time()
-    for root_dir, _dirs, fnames in os.walk(path):
-        for fn in fnames:
-            if not fn.startswith(".inprogress-"):
-                continue
-            full = os.path.join(root_dir, fn)
-            # sweep this job's own orphaned attempts immediately; a
-            # FOREIGN job's in-flight files are its live task-commit
-            # manifest — reclaim them only past a generous age window
-            # (a crashed writer's orphans are invisible to readers but
-            # would otherwise leak disk forever; nothing else sweeps
-            # dot-files).  Covers legacy un-scoped `.inprogress-part-*`
-            # names too.
-            if fn.startswith(inprog_prefix):
-                os.unlink(full)
-                continue
-            try:
-                if now - os.path.getmtime(full) > INPROGRESS_ORPHAN_AGE_SEC:
-                    os.unlink(full)
-            except OSError:
-                pass  # racing with its own writer/committer: leave it
+
+    def orphan(full: str) -> bool:
+        # sweep this job's own orphaned attempts immediately; a FOREIGN
+        # job's in-flight files are its live task-commit manifest —
+        # reclaim them only past a generous age window (a crashed
+        # writer's orphans are invisible to readers but would otherwise
+        # leak disk forever; nothing else sweeps dot-files).  Covers
+        # legacy un-scoped `.inprogress-part-*` names too.
+        fn = os.path.basename(full)
+        return fn.startswith(inprog_prefix) or (
+            fn.startswith(".inprogress-")
+            and now - os.path.getmtime(full) > INPROGRESS_ORPHAN_AGE_SEC)
+
+    _sweep(path, orphan)
+    if any(r["untyped"] for r in rows):
+        _warn_untyped()
     if not rows:
         # an empty APPEND to a dataset that already has data is a
         # complete no-op: writing the schema-only default-partition file
@@ -861,6 +894,7 @@ def _write_distributed(
         # arbitrarily many null-partition data files (r8 ADVICE)
         f = os.path.join(
             d, f"part-00000-{uuid.uuid4().hex[:8]}{_SCHEMA_FILE_SUFFIX}")
+        f_schema = _FileStats(*stats).stamp(f_schema)
         pq.write_table(pa.Table.from_batches([], schema=f_schema), f,
                        compression=compression,
                        compression_level=compression_level)

@@ -94,6 +94,7 @@ def test_ab_end_to_end_self_ratio(tmp_path):
     assert doc["calibration_sec"] > 0
     # compact line: summary only (full per-query A/B lives in the sidecar)
     ab = doc["ab"]
+    assert "error" not in ab, f"A/B degraded: {ab['error']}"
     assert ab["ref_commit"] == "HEAD"
     assert ab["ratio_total"] > 0
     assert set(ab["worst"]) <= {"tpch_q1_pricing_summary",

@@ -145,7 +145,8 @@ def test_validate_catches_bad_declared_types(spark, tmp_path):
     gt = _events_points(spark, SF_SMOKE)
     gt.geo.primary.geometry_types = ["Polygon"]  # data is points
     out = str(tmp_path / "bad.parquet")
-    gt.write(out)
+    # the writer stamps the types it sees; only as-given metadata can lie
+    gt.write(out, update_metadata=False)
     errs = validate(spark, out)
     assert any("undeclared" in e for e in errs)
 
@@ -635,7 +636,7 @@ def test_validate_stray_file_does_not_gate_data_checks(spark, tmp_path):
     gt = _events_points(spark, SF_SMOKE)
     gt.geo.primary.geometry_types = ["Polygon"]  # data is points -> error
     out = str(tmp_path / "straydir")
-    gt.write(out, single_file=False)
+    gt.write(out, single_file=False, update_metadata=False)
     with open(f"{out}/README.txt", "w") as fh:
         fh.write("notes")
     errs = validate(spark, out)
@@ -653,7 +654,7 @@ def test_validate_accepts_3d_declared_types(spark, tmp_path):
     gt = _events_points(spark, SF_SMOKE)
     gt.geo.primary.geometry_types = ["Point Z", "Point"]
     out = str(tmp_path / "z.parquet")
-    gt.write(out)
+    gt.write(out, update_metadata=False)
     errs = validate(spark, out)
     assert not any("undeclared" in e for e in errs), errs
 

@@ -367,15 +367,15 @@ def test_persist_roundtrip(points):
 
 
 def test_per_file_bbox_spill_path(points, tmp_path):
-    """Files that outgrow the in-memory buffer cap spill to a streaming
-    writer and still end with their exact bbox in the footer."""
+    """Files that outgrow one row group flush it to a streaming writer
+    and still end with their exact bbox in the footer."""
     import pyarrow.parquet as pq
     from geoparquet_io_spark.meta import GeoMeta
     from geoparquet_io_spark.sources.geoparquet import write
 
     out = str(tmp_path / "spill")
-    # row_group_rows=50 -> buffer cap 200 rows; 1000 points in one
-    # partition forces the spill branch
+    # row_group_rows=50 -> 1000 points in one partition flush 50-row
+    # groups before the file closes, so its footer is patched at close
     files = write(points.df.coalesce(1), out, geo=points.geo,
                   per_file_bbox="bbox", row_group_rows=50)
     assert files
